@@ -18,6 +18,7 @@ tiny jobs. Here:
 from __future__ import annotations
 
 import contextlib
+import csv
 import glob
 import os
 
@@ -62,14 +63,40 @@ def read_csv_folder(
 
     With ``schema=None`` all columns arrive as strings, matching the
     reference's read exactly (header-driven, no inferSchema); production
-    callers pass the explicit schema from ``schemas.py``.
+    callers pass the explicit schema from ``schemas.py``. The header is
+    read on the driver from the first CSV (no Spark job) and passed as
+    an all-string schema with ``enforceSchema=false``, so Spark checks
+    every file's header against it: a file with reordered or renamed
+    columns fails loudly instead of binding its values by position.
     """
     if not folder_has_files(path, ".csv"):
         return None
     reader = spark.read.option("header", str(header).lower())
+    if schema is None and header:
+        names = _csv_header(path)
+        if names is not None:
+            schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+            reader = reader.option("enforceSchema", "false")
     if schema is not None:
         reader = reader.schema(schema)
     return reader.csv(path)
+
+
+def _csv_header(path: str) -> list[str] | None:
+    """Column names of the first non-blank line of the folder's first
+    CSV, as Spark's header inference would name them. None when Spark
+    would rename them (empty or case-insensitively duplicate names get
+    an index suffix) or the file holds no header line; the caller then
+    leaves naming to Spark."""
+    first = min(
+        n for n in os.listdir(path) if n.endswith(".csv") and not n.startswith(("_", "."))
+    )
+    # utf-8-sig: Spark drops a leading BOM from the header too
+    with open(os.path.join(path, first), newline="", encoding="utf-8-sig") as fh:
+        names = next(csv.reader(line for line in fh if line.strip()), None)
+    if not names or "" in names or len({n.lower() for n in names}) < len(names):
+        return None
+    return names
 
 
 def read_jsonl_folder(

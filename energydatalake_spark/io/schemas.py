@@ -13,11 +13,14 @@ producing null-cast data.
 
 Why validate-then-cast instead of passing the schema to ``spark.read``:
 with ``header=true`` + explicit schema, Spark binds columns by
-POSITION and ignores the header names entirely — a reordered or
-renamed upstream feed would silently land values in the wrong columns,
-the exact failure mode this module exists to prevent. Reading
-all-string (header-driven) and casting against the declared schema
-keeps name-binding AND type enforcement. The casts are ``try_``-
+POSITION, so a feed whose column order differs from the declared one
+would land values in the wrong columns — and the declared names are
+the normalized ones (``interval_start``), not the feed's (``Interval
+Start``). Instead ``read_csv_folder`` reads the first file's header on
+the driver (no Spark job) and passes it as an all-string schema with
+``enforceSchema=false``, so Spark checks every file's header against
+it and a reordered or renamed file fails loudly; this module then
+binds the declared schema BY NAME and casts. The casts are ``try_``-
 variants so unparseable cells become null and flow into the pipelines'
 drop-null stage (P3+F1 interaction), matching the reference's
 pre-ANSI cast semantics.

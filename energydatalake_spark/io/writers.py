@@ -5,11 +5,19 @@ The reference appends to BigQuery via a staging bucket
 and overwrites one table (``mergeHistoricalWeather.py:100-105``). The
 contractual sink here is partitioned Parquet under a warehouse dir:
 ``upsert_table`` implements the insert-only-MERGE exactly-once
-contract directly on Parquet (batch dedup + null-safe anti-join +
-dynamic partition pruning), so the semantics do not depend on a table
-format's transaction log. On a Delta/Iceberg deployment the same
-call-site maps 1:1 onto ``MERGE ... WHEN NOT MATCHED INSERT`` — a
-format swap, not a semantics change.
+contract directly on Parquet (batch dedup + null-safe anti-join
+against the partitions the batch touches), so the semantics do not
+depend on a table format's transaction log. On a Delta/Iceberg
+deployment the same call-site maps 1:1 onto ``MERGE ... WHEN NOT
+MATCHED INSERT`` — a format swap, not a semantics change.
+
+Read-back scope (both merges): the driver collects the batch's
+distinct ``dt`` values (batch-sized) and lists the target's ``dt=``
+directories once; only touched directories that exist are read back.
+Untouched partitions are neither listed for schema nor scanned, so a
+merge costs what its batch costs, not what the warehouse holds. The
+listing is a snapshot: the merges assume a single writer per table,
+matching the reference's Scheduler-serialized jobs.
 
 Partitioning: time-series tables partition by event date derived from
 the interval start (SURVEY.md §4 "partition pruning") so that the four
@@ -18,10 +26,18 @@ analytics queries prune to the touched dates instead of scanning 100 TB.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _append(df: DataFrame, path: str, partitioned: bool) -> None:
+    writer = df.write.format("parquet").mode("append")
+    if partitioned:
+        writer = writer.partitionBy("dt")
+    writer.save(path)
 
 
 def append_table(
@@ -32,10 +48,49 @@ def append_table(
     """Warehouse append (S4). ``partition_date_col`` names a timestamp
     column; rows land under ``dt=YYYY-MM-DD`` partitions derived from it."""
     if partition_date_col is not None:
-        writer = df.withColumn("dt", F.to_date(F.col(partition_date_col)))
-        writer.write.format("parquet").mode("append").partitionBy("dt").save(path)
-    else:
-        df.write.format("parquet").mode("append").save(path)
+        df = df.withColumn("dt", F.to_date(F.col(partition_date_col)))
+    _append(df, path, partition_date_col is not None)
+
+
+def _table_entries(path: str) -> set[str]:
+    """Visible entries of a table directory; empty while the table does
+    not exist yet."""
+    if not os.path.isdir(path):
+        return set()
+    return {n for n in os.listdir(path) if not n.startswith((".", "_"))}
+
+
+def _partition_dir(d) -> str:
+    """The directory Spark writes a ``dt`` value to."""
+    return "dt=__HIVE_DEFAULT_PARTITION__" if d is None else f"dt={d.isoformat()}"
+
+
+def _touched_readback(
+    batch: DataFrame, path: str, entries: set[str], partitioned: bool
+) -> tuple[set, DataFrame | None]:
+    """The batch's distinct ``dt`` values, and the target rows a merge
+    of ``batch`` must see: the touched partitions that already exist
+    (the whole table when unpartitioned); None when there are none.
+
+    ``batch`` should be persisted: the collect then fills the cache the
+    caller's write reuses. Null and pre-1900 dates are ordinary
+    directory names here, so their rows are read back like any other."""
+    if not entries:
+        return set(), None
+    reader = batch.sparkSession.read
+    if not partitioned:
+        return set(), reader.parquet(path)
+    touched = {r.dt for r in batch.select("dt").distinct().collect()}
+    dirs = sorted(
+        os.path.join(path, _partition_dir(d))
+        for d in touched
+        if _partition_dir(d) in entries
+    )
+    if not dirs:
+        return touched, None
+    existing = reader.option("basePath", path).parquet(*dirs)
+    # A read of only the null partition would infer ``dt`` as void.
+    return touched, existing.withColumn("dt", F.col("dt").cast("date"))
 
 
 def upsert_table(
@@ -59,79 +114,41 @@ def upsert_table(
     - null-valued keys: the anti-join matches with ``eqNullSafe``, so
       a null-key row inserts exactly once instead of on every rerun.
 
-    Scale shape: the read-back is restricted to the ``dt`` partitions
-    the batch touches via a broadcast semi-join on the batch's distinct
-    dates — dynamic partition pruning keys the scan off that frame, so
-    nothing rides the driver (at 100 TB × years of partitions a driver
-    ``collect``+``isin`` list would not). Single-writer semantics,
-    matching the reference's Scheduler-serialized jobs.
+    Scale shape: the batch's distinct ``dt`` values are collected on the
+    driver and only the touched ``dt=`` directories that exist are read
+    back (module docstring); a batch of new days — the common case —
+    appends with no read-back. An unpartitioned table reads back whole.
+    Single writer per table: listing and anti-join see one snapshot, so
+    a concurrent writer of the same key can insert it twice.
     """
-    import os
-
-    spark = df.sparkSession
-    if partition_date_col is not None:
+    partitioned = partition_date_col is not None
+    if partitioned:
         df = df.withColumn("dt", F.to_date(F.col(partition_date_col)))
     # once-per-row within the batch itself (keep-any on key ties)
     df = df.dropDuplicates(keys)
-    exists = os.path.isdir(path) and any(
-        not n.startswith((".", "_")) for n in os.listdir(path)
-    )
-    if not exists:
-        writer = df.write.format("parquet").mode("append")
-        if partition_date_col is not None:
-            writer = writer.partitionBy("dt")
-        writer.save(path)
+    entries = _table_entries(path)
+    if not entries:
+        _append(df, path, partitioned)
         return
-    # The merge plan consumes the batch twice (partition-pruning side +
-    # anti-join side). Persist it — bounded by BATCH size, not table
-    # size — so the upstream source computes once; this also keeps any
-    # caller-attached df.observe metrics single-counted.
+    # The batch feeds the dt collect and the write. Persist it — bounded
+    # by BATCH size, not table size — so the upstream source computes
+    # once; this also keeps any caller-attached df.observe metrics
+    # single-counted.
     df = df.persist()
     try:
-        existing = spark.read.parquet(path)
-        if partition_date_col is not None:
-            existing = _pruned_readback(existing, df)
-        fresh = _fresh_rows(df, existing, keys)
-        writer = fresh.write.format("parquet").mode("append")
-        if partition_date_col is not None:
-            writer = writer.partitionBy("dt")
-        writer.save(path)
+        _, existing = _touched_readback(df, path, entries, partitioned)
+        fresh = df if existing is None else _fresh_rows(df, existing, keys)
+        _append(fresh, path, partitioned)
     finally:
         df.unpersist()
-
-
-def _pruned_readback(existing: DataFrame, batch: DataFrame) -> DataFrame:
-    """Restrict the target read-back to the ``dt`` partitions the batch
-    touches, without a driver round-trip: broadcast the batch's
-    distinct dates and semi-join on the partition column — dynamic
-    partition pruning keys the parquet scan off the broadcast result.
-
-    The sanity bound on ``dt`` exists for the optimizer, not the data:
-    DPP only fires when the pruning side carries a likely-selective
-    predicate (``isnotnull`` does not qualify), and without DPP this
-    semi-join would scan every partition of the target.
-
-    Rows outside that bound — null ``dt`` (unparseable source
-    timestamp) or pre-1900 dates — would be silently dropped from the
-    read-back by the semi-join, breaking exactly-once for exactly those
-    rows on redelivery. They are unioned back unconditionally: such
-    partitions are pathological by construction (a healthy feed has
-    none), so the extra scan is zero-to-tiny while correctness holds
-    for every partition."""
-    import datetime
-
-    epoch0 = F.lit(datetime.date(1900, 1, 1))
-    batch_dts = batch.select("dt").distinct().filter(F.col("dt") >= epoch0)
-    pruned = existing.join(F.broadcast(batch_dts), "dt", "left_semi")
-    odd = existing.filter(F.col("dt").isNull() | (F.col("dt") < epoch0))
-    return pruned.unionByName(odd)
 
 
 def _fresh_rows(df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of ``df`` whose key tuple is absent from ``existing`` —
     null-safe, so a null-valued key matches its prior insertion and is
-    not re-inserted on every rerun."""
-    target_keys = existing.select(*[F.col(f"`{k}`") for k in keys]).distinct()
+    not re-inserted on every rerun. Target keys need no ``distinct``:
+    build-side duplicates cannot change a left-anti join."""
+    target_keys = existing.select(*[F.col(f"`{k}`") for k in keys])
     cond = reduce(
         lambda a, b: a & b,
         [df[f"`{k}`"].eqNullSafe(target_keys[f"`{k}`"]) for k in keys],
@@ -184,20 +201,22 @@ def apply_cdc_batch(
     two same-key rows with EQUAL seq have no defined winner.
 
     Plain parquet has no row-level update, so the rewrite unit is the
-    PARTITION: only ``dt`` partitions the batch touches are read back,
-    merged, and atomically swapped via dynamic partition overwrite
+    PARTITION: only the ``dt`` partitions the batch touches are read
+    back (same driver-side listing as ``upsert_table``), merged, and
+    atomically swapped via dynamic partition overwrite
     (``partitionOverwriteMode=dynamic`` — untouched partitions are
     not listed, read, or rewritten; at 100 TB × years that is the
-    difference between a merge and a table rewrite). Requires the
-    key→partition mapping to be stable (event-date-keyed tables, the
-    reference's shape); a key that MOVES partitions needs a
+    difference between a merge and a table rewrite). A batch that
+    touches no existing partition appends its surviving rows. Requires
+    the key→partition mapping to be stable (event-date-keyed tables,
+    the reference's shape); a key that MOVES partitions needs a
     format-level MERGE (Delta) or a two-phase delete+insert.
     Unpartitioned tables rewrite the whole folder (documented
     degenerate case — partition them).
 
     Single-writer, like every sink here (Scheduler-serialized jobs).
     """
-    import os
+    import shutil
 
     from energydatalake_spark.operators.clean import dedup_latest
 
@@ -218,29 +237,21 @@ def apply_cdc_batch(
             f"apply_cdc_batch: {op_col!r} must be one of 'I','U','D' "
             f"and non-null; got {bad_op[0][op_col]!r}"
         )
-    if partition_date_col is not None:
+    partitioned = partition_date_col is not None
+    if partitioned:
         df = df.withColumn("dt", F.to_date(F.col(partition_date_col)))
     if seq_col is not None:
         df = dedup_latest(df, keys, seq_col, tiebreak=keys)
     else:
         df = df.dropDuplicates(keys)
-    df = df.persist()  # batch-sized; feeds partition list, anti-join, union
+    df = df.persist()  # batch-sized; feeds dt list, anti-join, union
     try:
         survivors = df.filter(F.col(op_col) != F.lit("D")).drop(op_col)
-        exists = os.path.isdir(path) and any(
-            not n.startswith((".", "_")) for n in os.listdir(path)
-        )
-        if not exists:
-            writer = survivors.write.format("parquet").mode("append")
-            if partition_date_col is not None:
-                writer = writer.partitionBy("dt")
-            writer.save(path)
+        entries = _table_entries(path)
+        touched, existing = _touched_readback(df, path, entries, partitioned)
+        if existing is None:
+            _append(survivors, path, partitioned)
             return
-        existing = spark.read.parquet(path)
-        if partition_date_col is not None:
-            # only the touched partitions ride the merge (null/pre-1900
-            # dt rows are unioned back by the same guard as upsert_table)
-            existing = _pruned_readback(existing, df)
         batch_keys = df.select(*[F.col(f"`{k}`") for k in keys]).distinct()
         anti_cond = reduce(
             lambda a, b: a & b,
@@ -258,39 +269,26 @@ def apply_cdc_batch(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             writer = merged.write.format("parquet").mode("overwrite")
-            if partition_date_col is not None:
+            if partitioned:
                 writer = writer.partitionBy("dt")
             writer.save(path)
         finally:
             spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", prev_mode
             )
-        if partition_date_col is not None:
+        if partitioned:
             # Dynamic overwrite cannot write an EMPTY partition: a dt
             # whose every row was deleted is absent from `merged` and
-            # its stale directory would survive. The touched-dt list is
-            # batch-sized by construction — remove the emptied ones.
-            # Null dt participates too (ADVICE r7): its rows live under
-            # dt=__HIVE_DEFAULT_PARTITION__, which _pruned_readback
-            # deliberately carries for exactly-once — so a delete batch
+            # its stale directory would survive — remove the emptied
+            # ones. Null dt participates too (ADVICE r7): its rows live
+            # under dt=__HIVE_DEFAULT_PARTITION__, so a delete batch
             # that empties it must also remove the directory, or the
             # pre-delete images resurrect.
-            import shutil
-
-            touched = {r.dt for r in df.select("dt").distinct().collect()}
             remaining = {
                 r.dt for r in merged.select("dt").distinct().collect()
             }
-            emptied = touched - remaining
-            for d in sorted(
-                emptied, key=lambda d: "" if d is None else d.isoformat()
-            ):
-                part_name = (
-                    "dt=__HIVE_DEFAULT_PARTITION__"
-                    if d is None
-                    else f"dt={d.isoformat()}"
-                )
-                part_dir = os.path.join(path, part_name)
+            for d in touched - remaining:
+                part_dir = os.path.join(path, _partition_dir(d))
                 if os.path.isdir(part_dir):
                     shutil.rmtree(part_dir)
     finally:

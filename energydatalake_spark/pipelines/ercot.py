@@ -239,15 +239,20 @@ def merge_historical_weather(spark: SparkSession, cfg: PipelineConfig) -> dict |
     df = apply_schema(normalize_columns(raw), "weather_historical")
     df = drop_nulls(df)
     # Three consumers here (zone counts, CSV export, warehouse) — cache
-    # IS the right tool when several actions share one input.
-    df.cache()
-    df, obs = _observed(df)
-    write_csv(df, os.path.join(cfg.sink_path + "_csv"))  # mhw:62-66
-    rep = _obs_report(obs)
-    rep["zone_counts"] = {
-        r["zone"]: r["count"] for r in df.groupBy("zone").count().collect()
-    }  # mhw:56-58
-    overwrite_table(df, cfg.sink_path)  # mhw:100-105
+    # IS the right tool when several actions share one input. Release
+    # the cached frame itself, not the observed one built on it: a
+    # cache entry left behind would serve this delivery's rows to the
+    # next call's identical CSV scan plan.
+    cached = df.cache()
+    try:
+        df, obs = _observed(cached)
+        write_csv(df, os.path.join(cfg.sink_path + "_csv"))  # mhw:62-66
+        rep = _obs_report(obs)
+        rep["zone_counts"] = {
+            r["zone"]: r["count"] for r in df.groupBy("zone").count().collect()
+        }  # mhw:56-58
+        overwrite_table(df, cfg.sink_path)  # mhw:100-105
+    finally:
+        cached.unpersist()
     rep["archived"] = archive_folder(cfg.source_dir, cfg.archive_dir)
-    df.unpersist()
     return rep

@@ -131,6 +131,21 @@ def test_merge_historical_weather(spark, env):
     assert spark.read.parquet(cfg.sink_path).count() == rep["rows"]
 
 
+def test_merge_historical_weather_releases_its_cache(spark, env):
+    """Two deliveries in one long-lived session, with no clearCache in
+    between: the second call must read its own delivery, not the first
+    one's cached CSV scan (same folder, same plan)."""
+    base, layout = env
+    cfg = _cfg(base, layout["weather_historical"], "hist_weather")
+    assert ercot.merge_historical_weather(spark, cfg) is not None
+    archived = pd.read_csv(os.path.join(cfg.archive_dir, "LZ_WEST.csv"))
+    # rows 1-10: no null cells (row 0 carries a null dew point)
+    archived.iloc[1:11].to_csv(os.path.join(cfg.source_dir, "second.csv"), index=False)
+    rep = ercot.merge_historical_weather(spark, cfg)
+    assert rep["rows"] == 10 and rep["zone_counts"] == {"LZ_WEST": 10}
+    assert spark.read.parquet(cfg.sink_path).count() == 10
+
+
 def test_cli_runner_end_to_end(spark, tmp_path, monkeypatch):
     """python -m energydatalake_spark --base ... --fixtures: all five
     pipelines run, warehouse tables exist, rerun is a clean no-op."""
@@ -312,6 +327,96 @@ def test_upsert_null_and_pre1900_dates_exactly_once(spark, tmp_path):
     upsert_table(df, path, keys=["k"], partition_date_col="t")  # redelivery
     got = sorted((r.k, r.v) for r in spark.read.parquet(path).collect())
     assert got == [(1, 1.0), (2, 2.0), (3, 3.0)]  # each exactly once
+
+
+def _kvt(spark, rows):
+    return spark.createDataFrame(rows, "k bigint, t string, v double").withColumn(
+        "t", F.to_timestamp("t")
+    )
+
+
+def _plant_corrupt_parquet(path, partition):
+    bad = os.path.join(path, partition, "part-corrupt.parquet")
+    with open(bad, "wb") as fh:
+        fh.write(b"not a parquet file")
+    return bad
+
+
+def test_upsert_new_partitions_skip_untouched_partitions(spark, tmp_path):
+    """A batch that lands only in new dt partitions appends without
+    reading the target back: an untouched partition holding a corrupt
+    parquet file is neither listed for schema nor scanned, so the cost
+    of a batch tracks the batch, not the warehouse."""
+    from energydatalake_spark.io.writers import upsert_table
+
+    path = str(tmp_path / "tbl")
+    seed = [(1, "2024-03-01 00:00:00", 1.0), (2, "2024-03-02 00:00:00", 2.0)]
+    upsert_table(_kvt(spark, seed), path, keys=["k"], partition_date_col="t")
+    bad = _plant_corrupt_parquet(path, "dt=2024-03-01")
+    batch = [(3, "2024-03-05 00:00:00", 3.0), (4, "2024-03-06 00:00:00", 4.0)]
+    upsert_table(_kvt(spark, batch), path, keys=["k"], partition_date_col="t")
+    os.remove(bad)
+    got = sorted((r.k, r.v, str(r.dt)) for r in spark.read.parquet(path).collect())
+    assert got == [
+        (1, 1.0, "2024-03-01"),
+        (2, 2.0, "2024-03-02"),
+        (3, 3.0, "2024-03-05"),
+        (4, 4.0, "2024-03-06"),
+    ]
+
+
+def test_upsert_mixed_new_and_existing_partitions_exactly_once(spark, tmp_path):
+    """A batch spanning an existing and a new partition reads back only
+    the existing touched one (the corrupt untouched partition is never
+    opened) and stays exactly-once when it is delivered twice."""
+    from energydatalake_spark.io.writers import upsert_table
+
+    path = str(tmp_path / "tbl")
+    seed = [(1, "2024-03-01 00:00:00", 1.0), (2, "2024-03-02 00:00:00", 2.0)]
+    upsert_table(_kvt(spark, seed), path, keys=["k"], partition_date_col="t")
+    bad = _plant_corrupt_parquet(path, "dt=2024-03-01")
+    batch = [
+        (2, "2024-03-02 00:00:00", 99.0),  # known key, existing partition
+        (3, "2024-03-02 06:00:00", 3.0),  # new key, existing partition
+        (4, "2024-03-03 00:00:00", 4.0),  # new partition
+    ]
+    for _ in range(2):  # the second pass is a redelivery
+        upsert_table(_kvt(spark, batch), path, keys=["k"], partition_date_col="t")
+    os.remove(bad)
+    got = sorted((r.k, r.v) for r in spark.read.parquet(path).collect())
+    assert got == [(1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)]
+
+
+def test_load_latest_fresh_day_job_count(spark, env):
+    """Guard on the write path's job count: a fresh day into an existing
+    table costs the CSV scan, the batch's dedup and dt collect, and the
+    append — no header job and no read-back jobs."""
+    import numpy as np
+
+    from energydatalake_spark.pipelines.fixtures import _write_csvs, gen_load
+
+    base, layout = env
+    cfg = _cfg(base, layout["load_latest"], "load_latest")
+    first = ercot.load_latest(spark, cfg)  # the existing table
+    assert first is not None
+    fresh = gen_load(np.random.default_rng(7))
+    for c in ("Time", "Interval Start", "Interval End"):
+        shifted = pd.to_datetime(fresh[c]) + pd.Timedelta(days=7)
+        fresh[c] = shifted.dt.strftime("%Y-%m-%d %H:%M:%S")
+    _write_csvs(fresh, cfg.source_dir)
+
+    sc = spark.sparkContext
+    group = "test_load_latest_fresh_day"
+    sc.setJobGroup(group, "fresh day into an existing table")
+    try:
+        rep = ercot.load_latest(spark, cfg)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert rep is not None and rep["rows"] > 0
+    assert spark.read.parquet(cfg.sink_path).count() == first["rows"] + rep["rows"]
+    assert len(jobs) <= 6, sorted(jobs)
 
 
 def test_upsert_matches_duckdb_insert_only_merge(spark, tmp_path):
@@ -528,8 +633,8 @@ def test_apply_cdc_batch_drops_fully_deleted_partition(spark, tmp_path):
 
 def test_apply_cdc_batch_drops_emptied_null_dt_partition(spark, tmp_path):
     """ADVICE r7 (medium): a delete batch that empties the null-dt
-    partition (dt=__HIVE_DEFAULT_PARTITION__, carried by
-    _pruned_readback for exactly-once) must remove that directory too —
+    partition (dt=__HIVE_DEFAULT_PARTITION__, read back like any
+    touched partition) must remove that directory too —
     otherwise the pre-delete images resurrect on the next read."""
     import os
 

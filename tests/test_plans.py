@@ -153,15 +153,17 @@ def test_forecast_vs_actual_no_cartesian(spark):
 
 def test_upsert_readback_prunes_partitions(spark, tmp_path):
     # The parquet MERGE must read back ONLY the dt partitions the batch
-    # touches, and must do it WITHOUT a driver collect: the pruned
-    # read-back is a broadcast semi-join whose scan carries a
-    # dynamicpruning PartitionFilters entry keyed off the batch's
-    # distinct dates. A re-run over one day never scans table history.
+    # touches: the driver collects the batch's distinct dates and the
+    # read-back lists and scans just the touched directories that exist.
+    # A re-run over one day never scans table history.
+    import datetime
+
     import pyspark.sql.functions as F
 
     from energydatalake_spark.io.writers import (
         _fresh_rows,
-        _pruned_readback,
+        _table_entries,
+        _touched_readback,
         upsert_table,
     )
 
@@ -172,13 +174,16 @@ def test_upsert_readback_prunes_partitions(spark, tmp_path):
     path = str(tmp_path / "tbl")
     upsert_table(df, path, keys=["k"], partition_date_col="t")
     batch = spark.createDataFrame(
-        [(100, "2024-03-01 05:00:00", 1.0)], "k bigint, t string, v double"
+        [(100, "2024-03-01 05:00:00", 1.0), (101, "2024-03-09 00:00:00", 2.0)],
+        "k bigint, t string, v double",
     ).withColumn("t", F.to_timestamp("t")).withColumn("dt", F.to_date("t"))
-    pruned = _pruned_readback(spark.read.parquet(path), batch)
-    plan = plan_str(pruned)
-    assert "dynamicpruning" in plan  # DPP, not a collect-backed isin
-    fresh = _fresh_rows(batch, pruned, ["k"])
-    assert [r.k for r in fresh.collect()] == [100]
+    entries = _table_entries(path)
+    touched, existing = _touched_readback(batch, path, entries, partitioned=True)
+    assert touched == {datetime.date(2024, 3, 1), datetime.date(2024, 3, 9)}
+    files = existing.inputFiles()
+    assert files and all("/dt=2024-03-01/" in f for f in files)
+    fresh = _fresh_rows(batch, existing, ["k"])
+    assert sorted(r.k for r in fresh.collect()) == [100, 101]
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

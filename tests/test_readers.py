@@ -585,3 +585,57 @@ def test_read_table_int96_timestamps(spark, tmp_path):
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = {r.event_id: r.ts for r in df.collect()}
     assert got[1].hour == 10 and got[2].minute == 30
+
+
+def _csv_folder(tmp_path, name, files, encoding="utf-8"):
+    folder = tmp_path / name
+    folder.mkdir()
+    for fname, text in files.items():
+        (folder / fname).write_text(text, encoding=encoding)
+    return str(folder)
+
+
+def test_csv_folder_rejects_mismatched_header(spark, tmp_path):
+    """Every file's header is checked against the first file's: a later
+    file with reordered or renamed columns fails loudly instead of
+    binding its values by position (which turned the reordered file's
+    cells into nulls that the pipelines then dropped)."""
+    import pytest
+
+    from energydatalake_spark.io.readers import read_csv_folder
+
+    first = "Time,Load\n2024-01-01 00:00:00,1\n"
+    for name, second in [
+        ("reordered", "Load,Time\n2,2024-01-02 00:00:00\n"),
+        ("renamed", "Time,Demand\n2024-01-02 00:00:00,2\n"),
+    ]:
+        folder = _csv_folder(tmp_path, name, {"a.csv": first, "b.csv": second})
+        df = read_csv_folder(spark, folder)
+        assert df.columns == ["Time", "Load"]
+        with pytest.raises(Exception, match="CSV header does not conform"):
+            df.collect()
+
+
+def test_csv_folder_header_matches_spark_inference(spark, tmp_path):
+    """The driver-side header read names columns exactly as Spark's own
+    header inference does: a BOM is dropped, blank leading lines are
+    skipped, a quoted name keeps its comma, and names Spark would
+    rename (duplicates, empty) are left to Spark."""
+    from energydatalake_spark.io.readers import read_csv_folder
+
+    cases = {
+        "odd_headers": (
+            {
+                "a.csv": '\n\n"Zone, Name",Time\nLZ_WEST,2024-01-01 00:00:00\n',
+                "b.csv": '"Zone, Name",Time\nLZ_EAST,2024-01-02 00:00:00\n',
+            },
+            ["Zone, Name", "Time"],
+        ),
+        "renamed_by_spark": ({"a.csv": "a,A,\n1,2,3\n"}, ["a0", "A1", "_c2"]),
+    }
+    for name, (files, columns) in cases.items():
+        folder = _csv_folder(tmp_path, name, files, encoding="utf-8-sig")
+        got = read_csv_folder(spark, folder)
+        want = spark.read.option("header", "true").csv(folder)
+        assert got.columns == want.columns == columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

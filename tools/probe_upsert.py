@@ -12,9 +12,9 @@ sampled within day i-1; the racing-cron/producer-retry shape the MERGE
 exists for) and runs one ``stream_folder_upsert`` AvailableNow pass
 against the same checkpoint. Two sinks measured over identical input:
 
-- ``partitioned`` — ``partition_date_col`` set: the read-back is
-  DPP-pruned to the ~2 dt partitions each batch touches
-  (io/writers.py:_pruned_readback), so per-tick cost should stay FLAT
+- ``partitioned`` — ``partition_date_col`` set: the read-back lists
+  and scans only the ~2 dt partitions each batch touches
+  (io/writers.py:_touched_readback), so per-tick cost should stay FLAT
   as the warehouse grows;
 - ``flat`` — unpartitioned: the anti-join's target-keys scan reads the
   WHOLE warehouse every tick, so per-tick cost should grow linearly
