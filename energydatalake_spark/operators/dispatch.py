@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from energydatalake_spark.portable import memo_put, memo_reset_on_new_context
+
 ASOF_AUTO_CONF = "spark.graft.asof.autoBucketMaxKeys"
 BAND_AUTO_CONF = "spark.graft.band.autoBucketMaxKeys"
 
@@ -96,9 +98,10 @@ def key_tuple(keys: Sequence[str]):
 #: filter is a different hash, so the memo can never serve a stale
 #: cardinality for different data lineage. A hash collision could at
 #: worst pick the other (result-identical, property-tested) tier.
-#: Lifecycle: cleared when the owning SparkContext object changes
-#: (the portable.cached_expr guard). Decisions, not results, are
-#: cached — every query still computes from the parquet inputs.
+#: Lifecycle: cleared when the owning SparkContext object changes, and
+#: capped with oldest-first eviction, both shared with
+#: ``portable.cached_expr``. Decisions, not results, are cached — every
+#: query still computes from the parquet inputs.
 _PROBE_CACHE: dict[tuple[int, tuple[str, ...]], int] = {}
 _PROBE_CACHE_SC: list = [None]
 
@@ -109,13 +112,9 @@ def key_count_estimate(df: DataFrame, keys: Sequence[str]) -> int:
     semantic hash, keys) within a session. NULL keys count as one value
     (they form a real window/join group downstream, so they deserve a
     parallelism slot like any other key — see ``key_tuple``)."""
-    import weakref
-
-    sc = df.sparkSession.sparkContext
-    ref = _PROBE_CACHE_SC[0]
-    if ref is None or ref() is not sc:
-        _PROBE_CACHE.clear()
-        _PROBE_CACHE_SC[0] = weakref.ref(sc)
+    memo_reset_on_new_context(
+        _PROBE_CACHE, _PROBE_CACHE_SC, df.sparkSession.sparkContext
+    )
     try:
         memo_key = (df.semanticHash(), tuple(keys))
     except Exception:
@@ -125,7 +124,7 @@ def key_count_estimate(df: DataFrame, keys: Sequence[str]) -> int:
     row = df.agg(F.approx_count_distinct(key_tuple(keys)).alias("n")).first()
     n = int(row["n"] or 0)
     if memo_key is not None:
-        _PROBE_CACHE[memo_key] = n
+        memo_put(_PROBE_CACHE, memo_key, n)
     return n
 
 

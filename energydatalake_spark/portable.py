@@ -20,6 +20,36 @@ def portable_round(col: Column, n: int) -> Column:
     return F.floor(col * F.lit(p) + F.lit(0.5)) / F.lit(p)
 
 
+#: Cap of the session-scoped driver memos (this module's parse cache
+#: and ``operators.dispatch``'s probe memo). Their keys are
+#: parameter-bounded (a few dozen per session); the cap only guards a
+#: pathological caller looping over unbounded distinct keys.
+MEMO_MAX = 512
+
+
+def memo_reset_on_new_context(memo: dict, owner: list, sc) -> None:
+    """Lifecycle guard for a driver memo holding JVM-backed values,
+    which die with their JVM: clear ``memo`` when ``sc`` is not the
+    SparkContext recorded in ``owner[0]`` (a weakref). A restarted
+    context is a new Python object by construction, so identity
+    detects session turnover without a py4j call per lookup."""
+    ref = owner[0]
+    if ref is None or ref() is not sc:
+        memo.clear()
+        owner[0] = weakref.ref(sc)
+
+
+def memo_put(memo: dict, key, value) -> None:
+    """Insert into a driver memo capped at ``MEMO_MAX``. When full,
+    evict only the oldest entry (dict insertion order), so one new key
+    costs one re-parse or re-probe instead of wiping every warm entry.
+    Lookups and inserts are not atomic; concurrent builders can race,
+    which at worst repeats an idempotent parse or probe."""
+    if key not in memo and len(memo) >= MEMO_MAX:
+        memo.pop(next(iter(memo)), None)
+    memo[key] = value
+
+
 #: Parsed-expression cache for the rendered SQL families (codebook
 #: literals, MinHash signature chains, sign-LSH folds). The texts are
 #: deterministic in their parameters, so repeat builds — every k-means
@@ -29,15 +59,7 @@ def portable_round(col: Column, n: int) -> Column:
 #: is an immutable wrapper over an unresolved expression tree, so one
 #: parsed object is safely shared by any number of plans.
 _EXPR_CACHE: dict[str, Column] = {}
-#: Lifecycle guard: cached java objects die with their JVM. A weakref
-#: to the owning SparkContext *Python object* detects session turnover
-#: without paying a py4j call per lookup — a restarted context is a
-#: new Python object by construction, so identity mismatch ⇒ clear.
 _EXPR_CACHE_SC: list[weakref.ref | None] = [None]
-#: Texts are parameter-bounded (a few dozen distinct strings per
-#: session); the cap only guards a pathological caller looping over
-#: unbounded distinct texts.
-_EXPR_CACHE_MAX = 512
 
 
 def cached_expr(sql: str) -> Column:
@@ -50,14 +72,9 @@ def cached_expr(sql: str) -> Column:
     sc = SparkContext._active_spark_context
     if sc is None:
         return F.expr(sql)
-    ref = _EXPR_CACHE_SC[0]
-    if ref is None or ref() is not sc:
-        _EXPR_CACHE.clear()
-        _EXPR_CACHE_SC[0] = weakref.ref(sc)
+    memo_reset_on_new_context(_EXPR_CACHE, _EXPR_CACHE_SC, sc)
     col = _EXPR_CACHE.get(sql)
     if col is None:
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-            _EXPR_CACHE.clear()
         col = F.expr(sql)
-        _EXPR_CACHE[sql] = col
+        memo_put(_EXPR_CACHE, sql, col)
     return col

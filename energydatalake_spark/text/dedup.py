@@ -123,8 +123,12 @@ def _persist_shingles(ex: DataFrame) -> DataFrame:
 
 
 def release_shingle_cache(blocking: bool = False) -> int:
-    """Unpersist every shingle explosion cached by prior near-dup
-    invocations; returns how many were released."""
+    """Unpersist every scratch frame registered by prior invocations —
+    the near-dup shingle explosions and ``line_dedup``'s line explode,
+    which is persisted on every call; returns how many were released.
+    A long-lived session calling these outside a bench loop should
+    call this (or ``energydatalake_spark.release_caches``) between
+    actions."""
     n = 0
     while _SHINGLE_CACHE:
         _SHINGLE_CACHE.pop().unpersist(blocking)

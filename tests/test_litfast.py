@@ -212,3 +212,18 @@ def test_cached_expr_identity_and_equivalence(spark):
     # same cached object in a second, differently-shaped plan
     two = spark.range(2).select(c1.alias("a"), "id").collect()
     assert all(_bits(r["a"]) == _bits(fresh) for r in two)
+
+
+def test_cached_expr_evicts_only_oldest_on_overflow(spark, monkeypatch):
+    """Past its cap the parse cache drops only its oldest entry (dict
+    insertion order): one new text must not force a re-parse of every
+    warm one."""
+    from energydatalake_spark import portable
+
+    monkeypatch.setattr(portable, "MEMO_MAX", 3)
+    monkeypatch.setattr(portable, "_EXPR_CACHE", {})
+    texts = [f"{i} + 1" for i in range(5)]
+    cols = [portable.cached_expr(t) for t in texts]
+    assert list(portable._EXPR_CACHE) == texts[2:]
+    assert all(portable.cached_expr(t) is c for t, c in zip(texts[2:], cols[2:]))
+    assert portable.cached_expr(texts[0]) is not cols[0]  # evicted, re-parsed

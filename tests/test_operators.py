@@ -616,3 +616,37 @@ def test_key_count_estimate_memoizes_identical_plans(spark, monkeypatch, tmp_pat
     # different key tuple on the same plan re-probes too
     assert dispatch.key_count_estimate(df2, ["k", "v"]) == 3
     assert calls == [1, 1]
+
+
+def test_key_count_estimate_memo_evicts_only_oldest(spark, monkeypatch, tmp_path):
+    """The probe memo is bounded like ``cached_expr``: past the cap it
+    drops only its oldest decision (dict insertion order), so a
+    long-lived session dispatching over many plans stays bounded and
+    keeps its recent decisions."""
+    from energydatalake_spark import portable
+    from energydatalake_spark.operators import dispatch
+
+    monkeypatch.setattr(portable, "MEMO_MAX", 3)
+    monkeypatch.setattr(dispatch, "_PROBE_CACHE", {})
+    path = str(tmp_path / "probe_t")
+    spark.createDataFrame(
+        [(str(i), i) for i in range(5)], "k string, v int"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    frames = [df.filter(f"v < {i}") for i in range(1, 5)]
+    assert [dispatch.key_count_estimate(f, ["k"]) for f in frames] == [1, 2, 3, 4]
+    assert len(dispatch._PROBE_CACHE) == 3
+    assert (frames[0].semanticHash(), ("k",)) not in dispatch._PROBE_CACHE
+
+    calls = []
+    orig_agg = type(df).agg
+
+    def counting_agg(self, *a, **kw):
+        calls.append(1)
+        return orig_agg(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "agg", counting_agg)
+    assert [dispatch.key_count_estimate(f, ["k"]) for f in frames[1:]] == [2, 3, 4]
+    assert calls == []  # the newest entries are still hits
+    assert dispatch.key_count_estimate(frames[0], ["k"]) == 1
+    assert calls == [1]  # the oldest was evicted and re-probes

@@ -418,3 +418,35 @@ def test_bench_order_extras_keep_registration_order():
             reg.QUERIES.pop(n, None)
             if n in reg._REGISTRATION_ORDER:
                 reg._REGISTRATION_ORDER.remove(n)
+
+
+#: Batch registry queries whose generated classes together far exceed
+#: Spark's default 100-entry codegen cache (~160 classes at sf0.001).
+_CODEGEN_SET = (
+    "pricing_summary", "moving_avg", "asof_join", "band_join",
+    "outer_join", "skew_join", "cumulative_revenue", "rollup_revenue",
+    "pivot_revenue", "quantiles", "forecast_vs_actual", "multikey_avg",
+)
+
+
+def test_repeat_queries_reuse_generated_code(spark):
+    """A long-lived session re-running its queries must reuse the
+    whole-stage-codegen classes it already compiled: this set needs
+    ~160 classes, more than Spark's default 100-entry cache holds, and
+    every miss is a Janino compile plus a fresh HotSpot JIT.
+    ``get_spark`` sizes the cache to the engine's working set, so the
+    second round compiles (almost) nothing. The count is CodegenMetrics'
+    compile histogram: one entry per Janino compile, i.e. per miss."""
+    from energydatalake_spark import release_caches
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_round() -> int:
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        for name in _CODEGEN_SET:
+            _q(name)(spark, SF_SMOKE).collect()
+            release_caches()
+        return compiles.METRIC_COMPILATION_TIME().getCount() - before
+
+    run_round()
+    assert run_round() <= 2

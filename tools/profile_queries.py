@@ -12,6 +12,9 @@ per query:
                 across parallel tasks — NOT wall time)
   shuffle_r/w   shuffle bytes read/written
   input_bytes   bytes read from storage
+  codegen_compiles  Janino compiles (generated-code cache misses) during
+                build+collect, from CodegenMetrics; near 0 on a warm
+                session whose class cache holds the query's classes
 
 The gap between wall_s and what tasks account for is driver-side time:
 planning, job scheduling round-trips, Python-side work between jobs
@@ -78,6 +81,7 @@ def main() -> int:
     sc = spark.sparkContext
     base = sc.uiWebUrl
     app = sc.applicationId
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     # --- bench.py warm-up policy, replicated (frozen r9 list) ---------
     for t in ("lineitem", "events", "documents", "embeddings", "customer"):
@@ -143,10 +147,12 @@ def main() -> int:
                 base, f"/api/v1/applications/{app}/jobs")}
             stages_before = _stage_attempts(base, app)
             sc.setJobDescription(f"profile:{name}")
+            c0 = compiles.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
             df = q.build(spark, sf_dir)
             n_rows = len(df.collect())
             wall = time.perf_counter() - t0
+            n_compiles = compiles.METRIC_COMPILATION_TIME().getCount() - c0
             sc.setJobDescription(None)
             jobs_after = [j for j in _rest(
                 base, f"/api/v1/applications/{app}/jobs")
@@ -167,6 +173,7 @@ def main() -> int:
                     v["shuffle_w"] for v in new_stages.values()) / 2**20, 2),
                 "input_mb": round(sum(
                     v["input_bytes"] for v in new_stages.values()) / 2**20, 2),
+                "codegen_compiles": n_compiles,
             }
             release_caches()
             if best is None or rec["wall_s"] < best["wall_s"]:
@@ -175,7 +182,8 @@ def main() -> int:
         print(f"# {name}: {best['wall_s']:.2f}s jobs={best['n_jobs']} "
               f"stages={best['n_stages']} tasks={best['n_tasks']} "
               f"exec={best['executor_ms']/1000:.2f}s "
-              f"shufW={best['shuffle_w_mb']}MB", file=sys.stderr, flush=True)
+              f"shufW={best['shuffle_w_mb']}MB "
+              f"compiles={best['codegen_compiles']}", file=sys.stderr, flush=True)
 
     out_path = args.out or f"/tmp/profile_queries_sf{sf}.json"
     payload = {"sf_dir": sf_dir, "profile": profile,
