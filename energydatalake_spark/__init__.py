@@ -28,10 +28,11 @@ def release_caches(blocking: bool = False) -> int:
     """Unpersist every frame the engine cached across query builds —
     MinHash/ngram shingle frames (text.dedup) and compact-rerank
     quantized frames (similarity.neardup). Long-lived sessions running
-    many registry queries call this between actions (bench.py and the
-    probe/oracle tools do); returns how many frames were released.
-    Persisted SQL frames are pinned by the JVM CacheManager until
-    unpersist — Python GC never frees them (r15 self-review)."""
+    many registry queries call this between actions (bench.py,
+    perfbench and the oracle/plan tools do); returns how many frames
+    were released. Persisted SQL frames are pinned by the JVM
+    CacheManager until unpersist — Python GC never frees them (r15
+    self-review)."""
     from energydatalake_spark.similarity.neardup import (
         release_quantized_cache,
     )

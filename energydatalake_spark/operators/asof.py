@@ -49,13 +49,6 @@ _PAYLOAD = "__asof_payload"
 _SIDE = "__asof_is_left"
 _BUCKET = "__asof_bucket"
 
-#: The time axis as a double (bucket math / tolerance arithmetic) —
-#: the shared definition lives in operators.dispatch (r19 review:
-#: one axis rule for the operator, the band probe, and the
-#: probe_joins diagnostic). Kept under its historical name for its
-#: one external importer, tools/probe_joins.py.
-_axis_double = axis_double
-
 
 def _right_payload_fields(right: DataFrame, on: str, by: Sequence[str]) -> list[str]:
     skip = {on, *by}
@@ -119,7 +112,7 @@ def _fill_and_project(
     """
 
     def _ax(col) -> "F.Column":
-        return _axis_double(unioned, col, on)
+        return axis_double(unioned, col, on)
 
     def _fill(d: str):
         if d == "backward":
@@ -301,8 +294,8 @@ def _global_asof(
     """
     by = list(by)
     stats = unioned.agg(
-        F.min(_axis_double(unioned, F.col(on), on)).alias("lo"),
-        F.max(_axis_double(unioned, F.col(on), on)).alias("hi"),
+        F.min(axis_double(unioned, F.col(on), on)).alias("lo"),
+        F.max(axis_double(unioned, F.col(on), on)).alias("hi"),
     )
     bounds = stats.collect()[0]  # 1 row; cheap by construction
     lo, hi = bounds["lo"], bounds["hi"]
@@ -316,7 +309,7 @@ def _global_asof(
             F.least(
                 F.lit(time_buckets - 1),
                 F.floor(
-                    (_axis_double(unioned, F.col(on), on) - F.lit(lo)) / F.lit(width)
+                    (axis_double(unioned, F.col(on), on) - F.lit(lo)) / F.lit(width)
                 ).cast("int"),
             ),
         )

@@ -95,9 +95,13 @@ def key_tuple(keys: Sequence[str]):
 #: cardinality job ran five times per suite for one decision. Keyed on
 #: the ANALYZED-PLAN semantic hash + key tuple — equal plans (same
 #: source, same filters/projections) share one probe; a different
-#: filter is a different hash, so the memo can never serve a stale
-#: cardinality for different data lineage. A hash collision could at
-#: worst pick the other (result-identical, property-tested) tier.
+#: filter is a different hash. The key does NOT see the input's
+#: contents: rewriting the same parquet path within one session keeps
+#: the analyzed-plan hash, so the memo then serves the OLD file's
+#: cardinality. The blast radius is the tier choice only — both tiers
+#: are property-tested to give identical results, so a stale entry
+#: (or a hash collision) can cost speed, never correctness. Keying on
+#: an input snapshot (file listing + sizes) would close this gap.
 #: Lifecycle: cleared when the owning SparkContext object changes, and
 #: capped with oldest-first eviction, both shared with
 #: ``portable.cached_expr``. Decisions, not results, are cached — every

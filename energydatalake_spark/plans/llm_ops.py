@@ -1038,22 +1038,8 @@ def _parquet_rows(sf_dir: str, name: str) -> int:
     ).count_rows()
 
 
-def _nd_bcast_max() -> int:
-    """Broadcast-rerank gate, env-overridable so the scale probe can
-    force the above-gate compact-rerank tier onto corpora that would
-    normally broadcast (SPARK_GRAFT_ND_BCAST_MAX=0 → every run takes
-    the co-shuffle + int8 path). Not a tuning knob — the default IS
-    the validated gate."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_ND_BCAST_MAX", ND_LSH_BROADCAST_MAX_N))
-
-
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     n = _parquet_rows(sf_dir, "embeddings")
-    gate = _nd_bcast_max()
     out = embedding_near_dup_lsh(
         read_table(spark, sf_dir, "embeddings"),
         threshold=ND_THRESHOLD,
@@ -1064,7 +1050,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (dim·8·n ≈ 1 GB at the bound): the default co-shuffle rerank
         # moves 2·dim·8 B per CANDIDATE and spills locally (the r13
         # x300 probe's α 1.95). Same results either way.
-        broadcast_vectors=n <= gate,
+        broadcast_vectors=n <= ND_LSH_BROADCAST_MAX_N,
         # Above the broadcast gate (r14, VERDICT r13 #2): pre-rerank
         # the candidates on int8-quantized vectors (dim bytes per
         # exchange row instead of dim·8) and recheck only the
@@ -1076,10 +1062,9 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cosine mass (3.57M survivors / 770k true pairs at 200k
         # vectors), yet still wins end-to-end — 50.6/327.7 s vs
         # int16's 52.5/482.2 s — because the 131M-candidate quantized
-        # joins dominate and int16 moves 1.7× their bytes. 8 is the
-        # measured default; the env knob re-runs the A/B.
-        compact_rerank=n > gate,
-        compact_bits=int(os.environ.get("SPARK_GRAFT_ND_COMPACT_BITS", "8")),
+        # joins dominate and int16 moves 1.7× their bytes, so the
+        # tier quantizes to int8 only.
+        compact_rerank=n > ND_LSH_BROADCAST_MAX_N,
     )
     return out.select("id_a", "id_b", _r(F.col("cosine"), 6).alias("cosine"))
 

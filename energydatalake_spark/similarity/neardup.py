@@ -131,7 +131,7 @@ def embedding_near_dup(
         "id", "vec", "blk", F.explode(F.array(*pair_keys)).alias("bp")
     ).select("id", "vec", "blk", F.col("bp.bi").alias("bi"), F.col("bp.bj").alias("bj"))
 
-    def score_block_pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_block_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bi, bj = key
         a = pdf[pdf["blk"] == bi]
         ids_a, mat_a = _normalized_matrix(a["id"].values, a["vec"])
@@ -177,8 +177,6 @@ def embedding_near_dup_lsh(
     seed: int = 42,
     broadcast_vectors: bool = False,
     compact_rerank: bool = False,
-    compact_bits: int = 8,
-    _compact_stats: dict | None = None,
 ) -> DataFrame:
     """Sub-quadratic near-dup: multi-table sign-LSH candidate
     generation + exact JVM-side cosine rerank (``aggregate``/``zip_with``
@@ -244,7 +242,8 @@ def embedding_near_dup_lsh(
     O(survivors) — output-proportional plus the (now ~halved) margin
     band. Ignored under ``broadcast_vectors`` (map-side joins already
     move no vectors through an exchange); it is the default co-shuffle
-    regime's fix. RETENTION: each call persists one narrow quantized
+    regime's fix: 327.7 s vs 774.0 s co-shuffle at x300 (BENCHHEAVY
+    ``queries_third_lsh_compact``). RETENTION: each call persists one narrow quantized
     frame; long-lived sessions can release those blocks eagerly with
     ``release_quantized_cache()`` after consuming the result. NOTE
     (ADVICE r15): building a SECOND compact-rerank plan evicts the
@@ -324,24 +323,16 @@ def embedding_near_dup_lsh(
         .dropDuplicates(["id_a", "id_b"])
     )
     if compact_rerank and not broadcast_vectors:
-        # Quantized pre-rerank: compact-vector joins carry dim (int8) or
-        # 2·dim (int16) bytes per candidate side instead of dim·8 B of
-        # float64 — the exchange mass that made the co-shuffle rerank
-        # spill. Margin = the analytic worst case of unit-vector
-        # rounding at the chosen width, so the exact recheck below sees
-        # every true pair. The width trades candidate-side bytes
-        # against the near-threshold MARGIN BAND the survivor join must
-        # carry: int8's margin is ~0.084 at dim 64 (wide band on
-        # corpora with cosine mass near the threshold), int16's is
-        # ~0.0007 (survivors ≈ true output).
-        if compact_bits == 8:
-            qscale, qtype = 127.0, "tinyint"
-        elif compact_bits == 16:
-            qscale, qtype = 32767.0, "smallint"
-        else:
-            raise ValueError(
-                f"compact_bits must be 8 or 16, got {compact_bits}"
-            )
+        # Quantized pre-rerank: compact-vector joins carry dim int8
+        # bytes per candidate side instead of dim·8 B of float64 — the
+        # exchange mass that made the co-shuffle rerank spill. The
+        # per-pair margin below bounds unit-vector rounding, so the
+        # exact recheck sees every true pair. int8's margin is ~0.084
+        # at dim 64, a wide survivor band on corpora with cosine mass
+        # near the threshold; int16 (margin ~0.0007) still loses end to
+        # end because it doubles the exchanged bytes (A/B in
+        # plans.llm_ops.q_dedup_embedding_lsh).
+        qscale, qtype = 127.0, "tinyint"
 
         # Arrow-batched quantization, NOT a Catalyst transform/aggregate
         # chain: interpreted HOF lambdas cost ~400 evals/row here, and
@@ -402,9 +393,7 @@ def embedding_near_dup_lsh(
                 yield pd.DataFrame(
                     {
                         "id": pdf["id"].values,
-                        "qv": list(
-                            q.astype(np.int8 if compact_bits == 8 else np.int16)
-                        ),
+                        "qv": list(q.astype(np.int8)),
                         "qe": qe,
                     }
                 )
@@ -442,8 +431,8 @@ def embedding_near_dup_lsh(
             F.col("qv").alias("qv_b"),
             F.col("qe").alias("qe_b"),
         )
-        # per-element products fit int (≤ 32767²); the dim-length sum
-        # can exceed int32 at 16-bit scale, so accumulate in bigint
+        # per-element products fit int (≤ 127²); the sum accumulates in
+        # bigint so it stays exact at any dim
         qdot = F.aggregate(
             F.zip_with(
                 F.col("qv_a"),
@@ -470,12 +459,6 @@ def embedding_near_dup_lsh(
             - F.col("qe_b")
             - F.col("qe_a") * F.col("qe_b")
         )
-        if _compact_stats is not None:
-            # measurement hook (tools/adjudicate_compact.py): expose
-            # the pre-filter candidate frame so the survivor band
-            # (survivors / true pairs) is countable without
-            # duplicating the margin math outside the operator
-            _compact_stats["candidates"] = cand
         cand = (
             cand.join(qa, "id_a")
             .join(qb, "id_b")
@@ -490,8 +473,6 @@ def embedding_near_dup_lsh(
             )
             .select("id_a", "id_b")
         )
-        if _compact_stats is not None:
-            _compact_stats["survivors"] = cand
     # Exact rerank: fetch vectors for the deduped candidates only
     # (under compact_rerank, only for the quantized-cosine survivors).
     # Both join sides derive from ONE (id, vec, nm) frame — under
@@ -825,7 +806,7 @@ def embedding_semantic_dedup(
 
     out_schema = "vec_id long, cluster_id long, keep boolean"
 
-    def dedup_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dedup_cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if pd.isna(key[0]):
             # a null grouping key arrives as None OR NaN depending on
             # the Arrow conversion (a nullable long key lands as NaN);

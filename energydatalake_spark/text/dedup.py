@@ -722,84 +722,6 @@ def simhash(
     )
 
 
-def simhash_wide(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int | None = None,
-) -> DataFrame:
-    """120-bit two-slice SimHash: ``(id, simhash_lo, simhash_hi)``.
-
-    The portable 60-bit fingerprint caps ``band_bits`` at 15 under the
-    pigeonhole constraint (max_hamming ≤ 3 needs ≥ 4 bands), which
-    pins the bucket space at 2¹⁵ — candidate mass ~n²·n_bands/2¹⁶, the
-    documented simhash_pairs ceiling. This tier doubles the
-    fingerprint instead of the band count: two INDEPENDENT 60-bit
-    slices of the same md5 (hex chars 1-15 and 16-30 — disjoint bits
-    of one digest, so one hash pass per feature) each run Charikar's
-    per-bit vote, giving 120 bits → 30-bit bands, 4 bands, pigeonhole
-    intact, bucket space 2³⁰. Same feature semantics as
-    :func:`simhash` (``n`` = distinct word n-gram shingles vs unigram
-    multiset); ONE exchange (the vote groupBy computes both words in a
-    single 120-column aggregate).
-
-    WHEN TO FLIP (r15 e2e measurement, BENCHHEAVY
-    ``simhash_wide_x100_e2e``): only when 15-bit-band candidate mass
-    actually dominates — at 500k saturated docs the 60-bit geometry's
-    16.5M candidates (~33/doc) verify in noise time and the doubled
-    vote aggregate makes 120-bit 2.0× SLOWER end-to-end (65.5 s vs
-    132.2 s, identical 1,018 output pairs). The wide tier wins once
-    candidate mass passes roughly 100× the corpus size (pairs/doc
-    ≳ 100, where verification rivals the ~1×-corpus fingerprint
-    cost); on saturated shingle universes mass grows ~n², so that is
-    ~1.5M docs of this profile. Check the candidate-mass pre-signal
-    before flipping; the default stays 60-bit.
-
-    Why "identical 1,018 pairs" holds even though the probe compares
-    only counts: the 120-bit lo word IS the 60-bit fingerprint
-    (pinned by the lo-word identity test), so hamming≤3 over 120
-    bits implies hamming≤3 over the lo 60 — every 120-bit pair is a
-    60-bit pair (both bandings are exhaustive for their hamming
-    bound by pigeonhole). Subset + equal counts ⇒ equal sets. NOTE
-    this argument needs the two-slice construction and uniform
-    bands; a variant that breaks the lo-word identity must re-verify
-    set-parity, not just counts."""
-    from energydatalake_spark.text.stats import _hex15_to_long
-
-    if n is None:
-        toks = df.select(
-            F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-        )
-    else:
-        toks = _exploded_shingles(df, text_col, id_col, n).select(
-            F.col(id_col), F.col("shingle").alias("tok")
-        )
-    md = F.md5(F.col("tok"))
-    h = toks.select(
-        F.col(id_col),
-        _hex15_to_long(md).alias("h1"),
-        # second slice: the NEXT 15 hex chars — disjoint digest bits,
-        # so the two 60-bit feature hashes are independent
-        F.conv(F.substring(md, 16, 15), 16, 10).cast("bigint").alias("h2"),
-    )
-
-    # Rendered SQL votes/folds (see simhash): one py4j call per column
-    # instead of ~6 — at 120 vote columns the element-wise form was
-    # ~1 s of driver round trips per build.
-    votes = h.groupBy(id_col).agg(
-        *[
-            cached_expr(_sql_simhash_vote(src, j) + f" AS {src}v{j}")
-            for src in ("h1", "h2")
-            for j in range(60)
-        ]
-    )
-    return votes.select(
-        F.col(id_col),
-        cached_expr(_sql_simhash_fold("h1v", 60) + " AS simhash_lo"),
-        cached_expr(_sql_simhash_fold("h2v", 60) + " AS simhash_hi"),
-    )
-
-
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -838,31 +760,14 @@ def simhash_pairs(
     max_hamming) caps band_bits at 15 for hamming ≤ 3, so the mass is
     ~n²/16k: 16.6M candidates at 500k docs (measured, vs 1,018 true
     pairs), 137M at 1.5M — fine for a partition-group, not for a
-    planetary corpus. That wider tier EXISTS (r14): ``bits=120`` with
-    ``band_bits=30`` routes through :func:`simhash_wide` — two
-    independent md5 slices, 4 bands over 2³⁰ buckets, pigeonhole
-    intact for max_hamming ≤ 3, candidate mass ~n²·4/2³¹ (32k× fewer
-    collisions than the 15-bit bucket space). At 100 TB you would
-    also shard the banding by a corpus partition key the way the
-    minhash index does."""
-    if bits > 60:
-        # Two-slice wide tier: pairs of 60-bit words, banded uniformly.
-        if bits != 120:
-            raise ValueError(
-                f"simhash_pairs: bits must be ≤ 60 (single portable "
-                f"hash) or exactly 120 (two md5 slices); got {bits}"
-            )
-        if 60 % band_bits:
-            raise ValueError(
-                f"simhash_pairs: the 120-bit tier needs band_bits "
-                f"dividing 60; got {band_bits}"
-            )
-        fps = simhash_wide(df, text_col, id_col, n=n)
-        words = [("simhash_lo", 60), ("simhash_hi", 60)]
-    else:
-        fps = simhash(df, text_col, id_col, bits, n=n)
-        words = [("simhash", bits)]
-    nb = sum(wbits // band_bits for _, wbits in words)
+    planetary corpus. A 120-bit two-slice tier (30-bit bands) was
+    measured 2.0× slower end to end at 500k docs and removed
+    (BENCHHEAVY_sf10.json, the 120-bit x100 e2e entry: 132.2 s vs
+    65.5 s at 60 bits, same 1,018 pairs). At 100 TB you would also
+    shard the banding by a corpus partition key the way the minhash
+    index does."""
+    fps = simhash(df, text_col, id_col, bits, n=n)
+    nb = bits // band_bits
     if max_hamming >= nb:
         # Pigeonhole guarantee requires distance < number of bands —
         # otherwise a pair can differ in every band and never collide.
@@ -875,18 +780,16 @@ def simhash_pairs(
     # re-plan the vote aggregation nb times).
     band_structs = [
         cached_expr(
-            f"struct({wi * 64 + b} AS band, "
-            f"(shiftright({wcol}, {b * band_bits}) & {mask}L) AS band_val)"
+            f"struct({b} AS band, "
+            f"(shiftright(simhash, {b * band_bits}) & {mask}L) AS band_val)"
         )
-        for wi, (wcol, wbits) in enumerate(words)
-        for b in range(wbits // band_bits)
+        for b in range(nb)
     ]
-    wcols = [wcol for wcol, _ in words]
     bands = fps.select(
-        F.col(id_col), *wcols, F.explode(F.array(*band_structs)).alias("bv")
+        F.col(id_col), "simhash", F.explode(F.array(*band_structs)).alias("bv")
     ).select(
         F.col(id_col),
-        *wcols,
+        "simhash",
         F.col("bv.band").alias("band"),
         F.col("bv.band_val").alias("band_val"),
     )
@@ -911,14 +814,14 @@ def simhash_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            *[F.col(f"a.{w}").alias(f"{w}_a") for w in wcols],
-            *[F.col(f"b.{w}").alias(f"{w}_b") for w in wcols],
+            F.col("a.simhash").alias("simhash_a"),
+            F.col("b.simhash").alias("simhash_b"),
         )
         .distinct()
     )
-    ham: Column = F.lit(0)
-    for w in wcols:
-        ham = ham + F.bit_count(F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b")))
+    ham = F.lit(0) + F.bit_count(
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
+    )
     return (
         cand.select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)

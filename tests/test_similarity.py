@@ -240,6 +240,32 @@ def test_embedding_semantic_dedup_cell_local(spark):
     assert out[30] == (30, True)           # zero-norm singleton
 
 
+def test_grouped_pandas_udfs_carry_full_type_hints(spark):
+    """Both applyInPandas callables annotate every parameter, so
+    pyspark infers the grouped-map eval type from the hints instead of
+    warning "Cannot infer the eval type from type hints" and falling
+    back. The inference runs when applyInPandas is called, so building
+    the plans is enough."""
+    import warnings
+
+    from energydatalake_spark.similarity.neardup import (
+        embedding_near_dup,
+        embedding_semantic_dedup,
+    )
+
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id int, embedding array<double>"
+    )
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i) / 10.0]) for i in range(5)],
+        "vec_id bigint, embedding array<float>",
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        embedding_near_dup(df, max_input_rows=None)
+        embedding_semantic_dedup(df, n_cells=1, centroids=cents)
+
+
 def test_embedding_semantic_dedup_cell_size_guard(spark):
     """A cell larger than max_cell_rows must fail loudly (within-cell
     scoring is O(|cell|²)) with guidance to raise n_cells, never
@@ -741,36 +767,6 @@ def test_compact_rerank_ragged_batch_raises(spark):
         embedding_near_dup_lsh(
             df, threshold=0.5, n_planes=4, dim=16, compact_rerank=True
         ).collect()
-
-
-def test_embedding_near_dup_lsh_compact16_parity(spark):
-    """compact_bits=16: same superset-margin contract at a ~120× tighter
-    margin — output identical to the default rerank."""
-    import numpy as np
-
-    from energydatalake_spark.similarity.neardup import embedding_near_dup_lsh
-
-    rng = np.random.default_rng(31)
-    rows = []
-    for i in range(300):
-        v = rng.normal(size=16)
-        rows.append((i, [float(x) for x in v]))
-        if i % 10 == 0:
-            rows.append((1000 + i, [float(x + 0.01) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.9, n_planes=8, dim=16)
-    plain = {
-        (r.id_a, r.id_b, round(r.cosine, 9))
-        for r in embedding_near_dup_lsh(df, **kw).collect()
-    }
-    c16 = {
-        (r.id_a, r.id_b, round(r.cosine, 9))
-        for r in embedding_near_dup_lsh(
-            df, compact_rerank=True, compact_bits=16, **kw
-        ).collect()
-    }
-    assert plain == c16
-    assert len(c16) >= 25
 
 
 def test_embedding_near_dup_lsh_compact_nan_parity(spark):

@@ -408,6 +408,16 @@ def test_simhash_shingle_features_discriminate_zipf(spark):
     assert sh3 == {(7, 40)}        # and nothing else pairs
     # the unigram form on the same corpus pairs unrelated docs
     assert len(uni) > len(sh3)
+    # Parameter checks: fingerprints wider than 60 bits hit simhash's
+    # portable-hash cap, and max_hamming must stay below the band count
+    # (4 bands of 15 bits) for the pigeonhole banding to be exhaustive.
+    for bad_kw in (
+        dict(bits=90, band_bits=30),
+        dict(bits=120, band_bits=30),
+        dict(bits=60, band_bits=15, max_hamming=4),
+    ):
+        with pytest.raises(ValueError):
+            simhash_pairs(df, **bad_kw)
 
 
 def test_simhash_shingle_short_docs_have_no_fingerprint(spark):
@@ -421,90 +431,3 @@ def test_simhash_shingle_short_docs_have_no_fingerprint(spark):
     assert out == {2, 3}
 
 
-def test_simhash_wide_lo_slice_matches_60bit_simhash(spark, docs):
-    """The 120-bit tier's low word uses the SAME feature hash as the
-    60-bit simhash (md5 hex 1-15), so simhash_lo must equal
-    simhash(bits=60) exactly; the high word comes from disjoint digest
-    bits and must differ somewhere."""
-    from energydatalake_spark.text.dedup import simhash_wide
-
-    wide = {r.doc_id: (r.simhash_lo, r.simhash_hi)
-            for r in simhash_wide(docs).collect()}
-    narrow = {r.doc_id: r.simhash
-              for r in simhash(docs, bits=60).collect()}
-    assert {k: v[0] for k, v in wide.items()} == narrow
-    for lo, hi in wide.values():
-        assert 0 <= lo < (1 << 60) and 0 <= hi < (1 << 60)
-    assert any(lo != hi for lo, hi in wide.values())
-
-
-def test_simhash_pairs_120bit_tier(spark, docs):
-    """bits=120 / band_bits=10 (12 bands — pigeonhole headroom for
-    max_hamming=11 on this tiny fixture): identical docs pair at
-    hamming 0, and the parameter validation rejects non-dividing band
-    widths, widths other than 120, and pigeonhole-violating
-    max_hamming."""
-    import pytest as _pt
-
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_pairs(
-            docs, bits=120, band_bits=10, max_hamming=11
-        ).collect()
-    }
-    assert pairs[(1, 4)] == 0          # identical docs
-    assert all(h <= 11 for h in pairs.values())
-    for bad_kw in (
-        dict(bits=90, band_bits=30),
-        dict(bits=120, band_bits=25),
-        dict(bits=120, band_bits=30, max_hamming=4),
-    ):
-        with _pt.raises(ValueError):
-            simhash_pairs(docs, **bad_kw)
-
-
-def test_simhash_pairs_120bit_matches_python_model(spark):
-    """Exact model twin of the wide tier: 120-bit fingerprints from
-    the two md5 slices, hamming = popcount(lo xor lo) +
-    popcount(hi xor hi) over all pairs — the banded Spark plan must
-    reproduce the model's full pair set at max_hamming where banding
-    recall is exact (pigeonhole: hamming ≤ 3 < 4 bands)."""
-    import hashlib
-    import itertools
-
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy cat"),
-        (3, "entirely different content about spark adaptive execution"),
-        (4, "watermarks gate state eviction in streaming aggregations"),
-    ]
-
-    def fp(text):
-        votes_lo, votes_hi = [0] * 60, [0] * 60
-        for tok in text.split(" "):
-            hx = hashlib.md5(tok.encode()).hexdigest()
-            h1, h2 = int(hx[:15], 16), int(hx[15:30], 16)
-            for j in range(60):
-                votes_lo[j] += 1 if (h1 >> j) & 1 else -1
-                votes_hi[j] += 1 if (h2 >> j) & 1 else -1
-        lo = sum(1 << j for j in range(60) if votes_lo[j] > 0)
-        hi = sum(1 << j for j in range(60) if votes_hi[j] > 0)
-        return lo, hi
-
-    want = {}
-    fps = {i: fp(t) for i, t in rows}
-    for (a, (la, ha)), (b, (lb, hb)) in itertools.combinations(fps.items(), 2):
-        d = bin(la ^ lb).count("1") + bin(ha ^ hb).count("1")
-        if d <= 3:
-            want[(a, b)] = d
-
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_pairs(
-            docs, bits=120, band_bits=30, max_hamming=3
-        ).collect()
-    }
-    assert got == want
-    assert (0, 1) in got and got[(0, 1)] == 0

@@ -17,8 +17,9 @@ The driver ships parquet only up to sf0.1; this tool synthesizes a
 - ``documents`` / ``embeddings``: NOT replicated — replication would
   plant a 10× exact-duplicate rate and blow up every dedup query
   superlinearly for a reason that has nothing to do with the plans.
-  Instead the scale_probe generators grow the corpus 10× with the
-  sf0.1 distribution shape (same dup rates, span pool ∝ n).
+  Instead ``gen_documents`` / ``gen_embeddings`` below synthesize a
+  10× corpus with the sf0.1 distribution shape (same dup rates, span
+  pool ∝ n), seeded with ``_GEN_SEED``.
 
 Writes to the given output dir (default /tmp/sfgen/sf1). Usage:
 
@@ -49,10 +50,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.scale_probe import _GEN_SEED, gen_documents, gen_embeddings  # noqa: E402
-
 SRC = os.environ.get("SPARK_GRAFT_GEN_SRC", "/root/testdata/sf0.1")
 
 #: table -> {column: key_family}; every member of a family shifts by
@@ -82,6 +79,76 @@ SKEW_FKS = {
 }
 SKEW_HOT_SHARE = 0.30
 SKEW_ZIPF_S = 1.2
+
+
+_GEN_SEED = 4242
+
+VOCAB = [
+    "key", "agg", "row", "scan", "slow", "fast", "table", "value", "part",
+    "hash", "merge", "batch", "spark", "a", "the", "line", "sort", "window",
+    "order", "data", "column", "join", "small", "customer", "query", "big",
+    "stream", "group", "filter", "vector", "sessionize",
+]
+
+
+def gen_documents(path: str, n_docs: int, rng: np.random.Generator) -> None:
+    """~54-token docs over the 31-word vocab; ~0.2% exact dups and a
+    planted pool of shared 6-token spans (the sf0.1 corpus shows ~1k
+    cross-doc spans at k=5-8) so dedup finds real structure."""
+    spans = [
+        list(rng.choice(VOCAB, size=6)) for _ in range(max(20, n_docs // 250))
+    ]
+    texts: list[str] = []
+    for i in range(n_docs):
+        if texts and rng.random() < 0.002:
+            texts.append(texts[rng.integers(0, len(texts))])  # exact dup
+            continue
+        toks = list(rng.choice(VOCAB, size=int(rng.integers(40, 69))))
+        if rng.random() < 0.3:  # plant a shared span mid-document
+            span = spans[rng.integers(0, len(spans))]
+            p = int(rng.integers(0, len(toks) - 6))
+            toks[p : p + 6] = span
+        texts.append(" ".join(toks))
+    langs = rng.choice(["en", "de", "fr", "es", "pt"], size=n_docs)
+    sources = rng.choice([f"src{i}" for i in range(20)], size=n_docs)
+    tbl = pa.table(
+        {
+            "doc_id": pa.array(range(n_docs), pa.int64()),
+            "text": pa.array(texts),
+            "lang": pa.array(langs.tolist()),
+            "source": pa.array(sources.tolist()),
+            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+        }
+    )
+    pq.write_table(tbl, path)
+
+
+def gen_embeddings(path: str, n_vecs: int, rng: np.random.Generator) -> None:
+    """Unit-norm 64-dim vectors in 10 clusters + ~2% planted near-dup
+    twins (tiny perturbation of an earlier vector)."""
+    centers = rng.normal(size=(10, 64))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    labels = rng.integers(0, 10, size=n_vecs)
+    vecs = centers[labels] + 0.35 * rng.normal(size=(n_vecs, 64))
+    dup = rng.random(n_vecs) < 0.02
+    for i in np.flatnonzero(dup):
+        if i == 0:
+            continue
+        j = int(rng.integers(0, i))
+        vecs[i] = vecs[j] + 0.01 * rng.normal(size=64)
+        labels[i] = labels[j]
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(range(n_vecs), pa.int64()),
+            "embedding": pa.array(
+                [v.astype(np.float32) for v in vecs],
+                pa.list_(pa.float32()),
+            ),
+            "label": pa.array(labels.astype(np.int32), pa.int32()),
+        }
+    )
+    pq.write_table(tbl, path)
 
 
 def _skew_main(out: str) -> None:
