@@ -3,20 +3,21 @@
 Brand-new implementation of the query/data-processing surface of the
 reference energy data lake (ashishsalunkhe/energydatalake), re-expressed
 Spark-first: DataFrame/SQL logical plans optimized by Catalyst, Parquet
-columnar storage, Structured Streaming for the incremental file-queue
-pipelines, and Pandas-UDF-backed operators only where built-ins cannot
+columnar storage, Structured Streaming for the stream-shaped registry
+queries, and Pandas-UDF-backed operators only where built-ins cannot
 express the semantics (none of the reference's own operators need that;
 only optional parity oracles do).
 
 Layout
 ------
 - ``session``    SparkSession factory (AQE, Arrow, UTC, tuned shuffle).
-- ``io``         schema-enforced readers, writers, file-queue archival.
+- ``io``         schema-enforced readers, writers, post-write archival.
 - ``operators``  relational/temporal operators (SURVEY.md §2 inventory).
 - ``text``       LLM-data-pipeline text ops (stats, lang-id, dedup).
 - ``similarity`` embedding similarity search (brute-force + LSH).
 - ``multimodal`` binary media columns: decode/feature plumbing (stubs).
-- ``streaming``  Structured Streaming variants of the batch pipelines.
+- ``streaming``  Structured Streaming operators (rollup, dedup, as-of)
+                 and batch sessionization.
 - ``pipelines``  the six reference pipelines, config-driven, local dirs.
 - ``plans``      query registry backing ``__spark_entry__.py``.
 """

@@ -1,5 +1,4 @@
 from energydatalake_spark.io.archive import archive_folder
-from energydatalake_spark.io.bucketing import read_bucketed, write_bucketed
 from energydatalake_spark.io.readers import read_csv_folder, read_table, folder_has_files
 from energydatalake_spark.io.schemas import (
     SOURCE_SCHEMAS,
@@ -8,7 +7,6 @@ from energydatalake_spark.io.schemas import (
     validate_columns,
 )
 from energydatalake_spark.io.writers import (
-    append_table,
     overwrite_table,
     upsert_table,
     write_csv,
@@ -18,13 +16,10 @@ __all__ = [
     "read_csv_folder",
     "read_table",
     "folder_has_files",
-    "append_table",
     "overwrite_table",
     "upsert_table",
     "write_csv",
     "archive_folder",
-    "write_bucketed",
-    "read_bucketed",
     "SOURCE_SCHEMAS",
     "SchemaDriftError",
     "apply_schema",

@@ -6,10 +6,10 @@ deletes the original, sequentially on the driver
 That gives once-per-file processing at the folder level but is
 write-then-archive (crash between = duplicate append ⇒ at-least-once).
 
-Batch variant here: an atomic local rename per file after a successful
-write — same contract, no copy. The true fix is the streaming file
-source (``streaming/file_queue.py``) whose checkpoint makes file
-processing exactly-once with ``cleanSource=archive`` handling the move.
+Here: an atomic local rename per file after a successful write — same
+contract, no copy. A re-run after a crash between write and archive
+re-reads the file, and ``writers.upsert_table``'s insert-only MERGE
+keeps that re-delivery from duplicating rows.
 """
 
 from __future__ import annotations

@@ -1,9 +1,4 @@
 from energydatalake_spark.operators.normalize import normalize_columns
-from energydatalake_spark.operators.casts import (
-    cast_decimal,
-    cast_float,
-    cast_timestamps,
-)
 from energydatalake_spark.operators.clean import drop_nulls, dedup, null_profile
 from energydatalake_spark.operators.asof import asof_join, asof_join_pandas
 from energydatalake_spark.operators.band import band_join
@@ -12,9 +7,6 @@ from energydatalake_spark.operators.setops import union_all
 
 __all__ = [
     "normalize_columns",
-    "cast_decimal",
-    "cast_float",
-    "cast_timestamps",
     "drop_nulls",
     "dedup",
     "null_profile",

@@ -2395,19 +2395,13 @@ def q_corpus_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the exact tier is one hash equi-join; the near-dup
     tier reuses the banded-LSH candidate generation (never
-    all-pairs). At production scale the existing corpus's signatures
-    and band buckets are a persisted index appended per batch, not
-    recomputed — that loop is implemented in
-    ``pipelines/incremental.py`` (build_minhash_index /
-    incremental_ingest, sharing this query's signature space via
-    ``text.dedup.minhash_signatures``; pinned scans-index-not-corpus
-    by tests/test_incremental.py). The plan HERE recomputes because
-    the oracle replays one self-contained expression. Contract
-    difference: THIS query judges batch docs against the corpus side
-    only (batch-batch pairs are filtered out), while the production
-    loop also applies an intra-batch tier (smaller-id batch docs count
-    as already-seen — ADVICE r8), because co-arriving duplicates are
-    the common case there."""
+    all-pairs). The plan recomputes the corpus side's signatures
+    because the oracle replays one self-contained expression. THIS
+    query judges batch docs against the corpus side only (batch-batch
+    pairs are filtered out); ``corpus_increment_batch`` adds the
+    intra-batch tier (smaller-id batch docs count as already-seen),
+    because co-arriving duplicates are the common case in
+    production."""
     docs = read_table(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % INCR_MOD == 0
     new_h = docs.filter(is_new).select("doc_id", F.md5("text").alias("h"))
@@ -2486,10 +2480,7 @@ def q_corpus_increment_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller-id batch doc, through both tiers: exact (md5 equality)
     and near (MinHash LSH pairs, same parameters as `minhash_pairs`).
     Greedy min-id rule, so each duplicate cluster arriving together
-    admits exactly one representative. This is the oracle-checked
-    twin of ``pipelines.incremental.incremental_ingest``'s
-    intra-batch semantics (which probes a persisted index instead of
-    recomputing — same verdict contract).
+    admits exactly one representative.
 
     Scale shape: the exact tier is ONE hash equi-join of the batch
     against all docs with the eligibility predicate (corpus, or batch

@@ -1689,9 +1689,7 @@ _register(
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (batch form; the stateful streaming
-    twin — applyInPandasWithState — is exercised in tests, same
-    semantics)."""
+    """Gap-based sessionization (batch window form, one shuffle)."""
     from energydatalake_spark.streaming.sessions import sessionize
 
     e = read_table(spark, sf_dir, "events")
@@ -1995,17 +1993,12 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction — the pytest suite pins the streaming path itself, so
     a silent streaming regression cannot hide behind the fallback)."""
     import os
-    import sys
     import warnings
 
     from energydatalake_spark.io.readers import read_table_stream
     from energydatalake_spark.streaming.dedup import streaming_dedup
     from energydatalake_spark.streaming.windows import run_stream_to_memory
 
-    # Loud entry marker: this query historically never got a driver
-    # CORRECTNESS row (50 recorded / 51 registered, rounds 2-4) — make
-    # any invocation visible in stderr so absence is attributable.
-    print("# streaming_dedup: entered", file=sys.stderr, flush=True)
     path = os.path.join(sf_dir, "documents.parquet")
     try:
         from energydatalake_spark.io.readers import scoped_nanos_conf

@@ -1,26 +1,11 @@
-from energydatalake_spark.streaming.dedup import (
-    streaming_dedup,
-    streaming_dedup_within_watermark,
-)
-from energydatalake_spark.streaming.file_queue import (
-    stream_folder_to_table,
-    stream_folder_upsert,
-)
-from energydatalake_spark.streaming.sessions import (
-    sessionize,
-    sessionize_sql,
-    sessionize_stream,
-)
+from energydatalake_spark.streaming.dedup import streaming_dedup
+from energydatalake_spark.streaming.sessions import sessionize, sessionize_sql
 from energydatalake_spark.streaming.windows import hourly_rollup, run_stream_to_memory
 
 __all__ = [
-    "stream_folder_to_table",
-    "stream_folder_upsert",
     "hourly_rollup",
     "run_stream_to_memory",
     "sessionize",
     "sessionize_sql",
-    "sessionize_stream",
     "streaming_dedup",
-    "streaming_dedup_within_watermark",
 ]

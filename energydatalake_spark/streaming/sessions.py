@@ -1,37 +1,23 @@
-"""Sessionization — gap-based event sessions, batch and stateful
-streaming.
+"""Sessionization — gap-based event sessions.
 
-Batch (``sessionize``): the classic windowed formulation — per-key
-lag, boundary flag when the gap is exceeded, running sum of boundaries
-as the session index, then one grouped aggregate per session. ONE
+``sessionize`` is the classic windowed formulation — per-key lag,
+boundary flag when the gap is exceeded, running sum of boundaries as
+the session index, then one grouped aggregate per session. ONE
 shuffle total: the windows and the final (key, sid) aggregate all
 reuse the same key hash partitioning (audited in tests/test_plans.py).
-Order-invariant under timestamp ties, expressible 1:1 in ANSI SQL.
+Order-invariant under timestamp ties, expressible 1:1 in ANSI SQL
+(``sessionize_sql`` is the DuckDB oracle).
 
-Streaming (``sessionize_stream``): the same semantics as a custom
-stateful operator over ``applyInPandasWithState`` — per-key state
-carries (session start, last ts, count, sum) across micro-batches;
-a session is emitted when a new event opens the next one (gap
-exceeded) or when event-time timeout fires after the watermark passes
-the gap. This is the operator shape Structured Streaming cannot
-express with built-in windows (session windows keyed by data gaps,
-arbitrary per-session payload).
-
-Scale: state is O(active keys), each entry a few scalars; the gap
-timeout bounds it. Batch variant shuffles (key, ts, value) rows once
-— no driver involvement anywhere.
+Scale: shuffles (key, ts, value) rows once — no driver involvement
+anywhere.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
 
 def _epoch_us(df: DataFrame, ts_col: str) -> Column:
     """Integer-µs time axis for ``ts_col``, robust to how the source
@@ -43,17 +29,6 @@ def _epoch_us(df: DataFrame, ts_col: str) -> Column:
     if isinstance(df.schema[ts_col].dataType, T.TimestampNTZType):
         col = col.cast("timestamp")
     return F.unix_micros(col)
-
-
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start_us", T.LongType()),
-        T.StructField("session_end_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-    ]
-)
 
 
 def sessionize(
@@ -132,106 +107,3 @@ SELECT user_id,
        SUM(value) AS sum_value
 FROM s GROUP BY user_id, sid
 """
-
-
-def sessionize_stream(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-    gap_minutes: int = 240,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stateful streaming sessionization via ``applyInPandasWithState``.
-
-    Emits a session row whenever a later event closes it (gap
-    exceeded within or across micro-batches) and flushes the open
-    session on event-time timeout once the watermark passes. State per
-    key: [start_us, last_us, n_events, sum_value].
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        closed: list[tuple[int, int, int, int, float]] = []
-        if state.hasTimedOut:
-            if state.exists:
-                s0, s1, n, v = state.get
-                closed.append((user, s0, s1, n, v))
-                state.remove()
-        else:
-            if state.exists:
-                cur = list(state.get)
-            else:
-                cur = None
-            chunks = [p for p in pdfs if len(p)]  # iterator: always truthy
-            rows = pd.concat(chunks) if chunks else None
-            if rows is not None:
-                rows = rows.sort_values("__us")
-                for us, val in zip(rows["__us"], rows[value_col]):
-                    us = int(us)
-                    val = float(val)
-                    if cur is None:
-                        cur = [us, us, 1, val]
-                    elif us > cur[1] and us - cur[1] > gap_us:
-                        closed.append((user, cur[0], cur[1], cur[2], cur[3]))
-                        cur = [us, us, 1, val]
-                    elif us < cur[0] - gap_us:
-                        # In-watermark late event older than the open
-                        # session by more than the gap: its own (already
-                        # closed) session. Batch would merge any events
-                        # between it and cur[0]; those are gone from
-                        # state — the documented late-data approximation.
-                        closed.append((user, us, us, 1, val))
-                    else:
-                        # Extend the session in either direction: a late
-                        # event within the gap LOWERS the start (batch
-                        # parity), a newer one raises the end.
-                        cur[0] = min(cur[0], us)
-                        cur[1] = max(cur[1], us)
-                        cur[2] += 1
-                        cur[3] += val
-            if cur is not None:
-                state.update(tuple(cur))
-                # Close the open session once event time moves gap past
-                # its end.
-                state.setTimeoutTimestamp(cur[1] // 1000 + gap_minutes * 60_000)
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=[
-                    "user_id",
-                    "session_start_us",
-                    "session_end_us",
-                    "n_events",
-                    "sum_value",
-                ],
-            )
-
-    prepared = stream.withWatermark(ts_col, watermark).select(
-        F.col(key_col),
-        _epoch_us(stream, ts_col).alias("__us"),
-        F.col(ts_col),
-        F.col(value_col),
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("start_us", T.LongType()),
-            T.StructField("last_us", T.LongType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    return prepared.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

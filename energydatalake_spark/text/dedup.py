@@ -360,9 +360,8 @@ def minhash_pairs(
     until expected candidates/doc ≤ ``max_cand_per_doc``, keeping
     candidate mass linear in corpus size instead of quadratic. Leave
     it ``None`` (the default) wherever the static geometry is part of
-    the contract — value-hash oracles, or signature-index
-    compatibility (pipelines/incremental.py persists signatures at a
-    fixed geometry; a geometry switch would orphan the index).
+    the contract — value-hash oracles, or any signature persisted at a
+    fixed geometry (a geometry switch would orphan it).
 
     ``shingle_frame`` (optional) is a precomputed
     :func:`shared_shingle_frame` over the SAME (df, text_col, id_col,
@@ -1048,61 +1047,4 @@ def substring_dedup(
         F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
         F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
         F.coalesce(out_col, F.lit("")).alias(out_col),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    bands: int = 16,
-    rows: int = 2,
-) -> DataFrame:
-    """Per-document MinHash signature as ONE array column — the
-    persistable form of the signature matrix ``minhash_pairs`` builds
-    inline (same shingles, same multiply-shift permutations, so the
-    two signature spaces are identical and index lookups match inline
-    runs). One row per document with ≥1 shingle: ``(id_col,
-    sig: array<bigint> length bands*rows)``.
-
-    Scale shape: identical to minhash_pairs' signature stage — one
-    shingle explode shuffled as 32-bit hash ints, one
-    map-side-combining min-aggregate per permutation."""
-    k = bands * rows
-    ex = _exploded_shingles(df, text_col, id_col, n).select(
-        F.col(id_col), _hash_long(F.md5(F.col("shingle"))).alias("h0")
-    )
-    agg = ex.groupBy(id_col).agg(*_minhash_sig_cols(k))
-    return agg.select(
-        F.col(id_col),
-        cached_expr("array(" + ",".join(f"m{i}" for i in range(k)) + ") AS sig"),
-    )
-
-
-def signature_band_buckets(
-    sigs: DataFrame, id_col: str = "doc_id", bands: int = 16, rows: int = 2
-) -> DataFrame:
-    """LSH band buckets from a signature frame: one row per (doc,
-    band) with the band's hash — the same ``md5(concat_ws(','))`` rule
-    minhash_pairs uses, so buckets from a persisted index collide with
-    buckets from a live batch. Input: ``(id_col, sig array<bigint>)``.
-    Output: ``(id_col, band, band_hash)``."""
-    band_structs = [
-        cached_expr(
-            f"struct({b} AS band, md5(concat_ws(','"
-            + "".join(
-                f", CAST(element_at(sig, {i + 1}) AS STRING)"
-                for i in range(b * rows, (b + 1) * rows)
-            )
-            + ")) AS band_hash)"
-        )
-        for b in range(bands)
-    ]
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bh")
-    ).select(
-        F.col(id_col),
-        F.col("bh.band").alias("band"),
-        F.col("bh.band_hash").alias("band_hash"),
     )

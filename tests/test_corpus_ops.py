@@ -1,5 +1,8 @@
-"""Known-answer tests for the r6 corpus ops: per-source dataset-card
-rollup, incremental ingest dedup, and the boilerplate phrase filter."""
+"""Known-answer tests for the registry's corpus ops: per-source
+dataset-card rollup, batch admission against the corpus
+(``corpus_increment`` / ``corpus_increment_batch``), the boilerplate
+phrase filter, JSON extraction, snapshot diff, embedding clusters and
+the curation funnel."""
 
 from __future__ import annotations
 

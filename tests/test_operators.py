@@ -3,27 +3,15 @@
 from __future__ import annotations
 
 import datetime as dt
-from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
 from energydatalake_spark.operators.band import band_join
-from energydatalake_spark.operators.casts import (
-    cast_decimal,
-    cast_float,
-    cast_timestamps,
-)
 from energydatalake_spark.operators.clean import dedup, drop_nulls, null_profile
 from energydatalake_spark.operators.normalize import normalize_columns, normalize_name
 from energydatalake_spark.operators.setops import union_all
 from energydatalake_spark.operators.topk import top_k_per_group
-from energydatalake_spark.operators.aggregates import (
-    avg_by_hour,
-    avg_by_month,
-    mix_percentage,
-    multikey_avg_desc,
-)
 
 
 def test_normalize_name():
@@ -35,28 +23,6 @@ def test_normalize_name():
 def test_normalize_columns(spark):
     df = spark.createDataFrame([(1, 2)], ["Interval Start", "Load MW"])
     assert normalize_columns(df).columns == ["interval_start", "load_mw"]
-
-
-def test_casts(spark):
-    df = spark.createDataFrame(
-        [("2024-01-02 03:04:05", "12.345", "9.87")], ["t", "d", "f"]
-    )
-    out = cast_float(cast_decimal(cast_timestamps(df, ["t"]), ["d"]), ["f"]).collect()[0]
-    assert out.t == dt.datetime(2024, 1, 2, 3, 4, 5)
-    assert out.d == Decimal("12.35")  # HALF_UP to 2dp, reference README.md:115
-    assert abs(out.f - 9.87) < 1e-5
-
-
-def test_cast_timestamp_offset_pattern(spark):
-    df = spark.createDataFrame([("2024-01-02 03:04:05-05:00",)], ["t"])
-    out = cast_timestamps(df, ["t"], fmt="yyyy-MM-dd HH:mm:ssXXX").collect()[0]
-    assert out.t == dt.datetime(2024, 1, 2, 8, 4, 5)  # session tz UTC
-
-
-def test_unparseable_timestamp_yields_null(spark):
-    df = spark.createDataFrame([("not a time",), ("2024-01-01 00:00:00",)], ["t"])
-    out = cast_timestamps(df, ["t"]).collect()
-    assert sum(r.t is None for r in out) == 1
 
 
 def test_drop_nulls_and_profile(spark):
@@ -286,25 +252,6 @@ def test_top_k_per_group(spark):
     assert [(r.i, r.rn) for r in sorted(out, key=lambda r: r.rn)] == [(2, 1), (5, 2)]
 
 
-def test_aggregate_builders(spark):
-    df = spark.createDataFrame(
-        [
-            (dt.datetime(2024, 1, 1, 5), 10.0, 2.0, 8.0, "x", "u"),
-            (dt.datetime(2024, 2, 1, 5), 20.0, 2.0, 18.0, "x", "u"),
-            (dt.datetime(2024, 2, 1, 7), 30.0, 10.0, 20.0, "y", "u"),
-        ],
-        "t timestamp, load double, solar double, wind double, a string, b string",
-    )
-    months = {r.month: r.avg_value for r in avg_by_month(df, "t", "load").collect()}
-    assert months == {1: 10.0, 2: 25.0}
-    hours = {r.hour: r.avg_value for r in avg_by_hour(df, "t", "load").collect()}
-    assert hours == {5: 15.0, 7: 30.0}
-    mix = mix_percentage(df, ["solar", "wind"]).collect()[0]
-    assert float(mix.solar_percent) + float(mix.wind_percent) == pytest.approx(100.0)
-    top = multikey_avg_desc(df, ["a", "b"], "load").collect()
-    assert top[0].a == "y" and float(top[0].average_price) == 30.0
-
-
 def test_pearson_corr_matches_numpy(spark):
     """The decimal-moment formula must agree with an independent
     float64 reference (numpy) to ~1e-9 — the decimals buy cross-engine
@@ -419,37 +366,6 @@ def test_connected_components_matches_union_find(spark):
         r.v: r.label for r in connected_components(edges, nodes=nodes).collect()
     }
     assert got_uf == expected
-
-
-def test_validate_rows_and_split(spark):
-    """Expectations: pass/fail per rule, NULL counts as failed, string
-    and Column rules mix, split_valid partitions exactly."""
-    from pyspark.sql import functions as F
-
-    from energydatalake_spark.operators.clean import split_valid, validate_rows
-
-    df = spark.createDataFrame(
-        [(1, 10.0, "a"), (2, -5.0, None), (3, None, "c"), (4, 7.0, "d")],
-        "id bigint, v double, s string",
-    )
-    rules = {
-        "v_positive": "v > 0",
-        "s_present": F.col("s").isNotNull(),
-    }
-    got = {
-        r.id: sorted(r.failed_rules)
-        for r in validate_rows(df, rules).collect()
-    }
-    assert got == {
-        1: [],
-        2: ["s_present", "v_positive"],
-        3: ["v_positive"],  # NULL v -> rule cannot hold -> failed
-        4: [],
-    }
-    good, bad = split_valid(df, rules)
-    assert {r.id for r in good.collect()} == {1, 4}
-    assert "failed_rules" not in good.columns
-    assert {r.id for r in bad.collect()} == {2, 3}
 
 
 def test_cc_small_graph_boundary(spark):

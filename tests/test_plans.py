@@ -186,48 +186,6 @@ def test_upsert_readback_prunes_partitions(spark, tmp_path):
     assert sorted(r.k for r in fresh.collect()) == [100, 101]
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key into the same bucket count
-    must SortMergeJoin with NO shuffle (and, with per-bucket sort, no
-    re-sort of the streamed side) — the layout-time answer to the
-    dominant fact-to-fact shuffle at 100 TB."""
-    import pyspark.sql.functions as F
-
-    from energydatalake_spark.io.bucketing import read_bucketed, write_bucketed
-    from energydatalake_spark.io.readers import read_table
-
-    li = read_table(spark, SF_SMOKE, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    od = read_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    write_bucketed(li, "li_bkt", ["l_orderkey"], n_buckets=8)
-    write_bucketed(od, "od_bkt", ["o_orderkey"], n_buckets=8)
-    # At sf0.001 both sides fit the broadcast threshold and the planner
-    # rightly prefers BroadcastHashJoin (disabling the bucketed scan);
-    # pin the shuffle-join regime the layout exists for — at 100 TB
-    # neither fact table broadcasts.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = read_bucketed(spark, "li_bkt").join(
-            read_bucketed(spark, "od_bkt"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = plan_str(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucket layout replaces the shuffle
-        assert "Bucketed: true" in plan
-        # row-count sanity vs the shuffled plan
-        expect = li.join(od, F.col("l_orderkey") == F.col("o_orderkey")).count()
-        assert j.count() == expect
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_bkt")
-        spark.sql("DROP TABLE IF EXISTS od_bkt")
-
-
 def test_moving_avg_windows_all_partitioned(spark):
     # VERDICT r6 #5: the trailing 7-row window must not fall back to an
     # unpartitioned WindowExec (single-partition sort of the whole

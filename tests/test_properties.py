@@ -994,127 +994,6 @@ def test_substring_dedup_mixed_whitespace(spark):
     assert got[0] == (5, 0, "") and got[1] == (5, 0, "")
 
 
-def _py_incremental_ingest(corpus, batch, n=3, bands=16, rows=2, threshold=0.5):
-    """Independent model of pipelines.incremental.incremental_ingest:
-    exact tier = md5 text equality against the corpus; near tier =
-    banded signature collision between batch and corpus docs, verified
-    by the SIGNATURE-estimated Jaccard (matching-component fraction —
-    the index path deliberately has no shingle sets). Exact beats
-    near; the min matching id wins across BOTH the corpus and the
-    smaller-id batch docs (intra-batch tier, ADVICE r8); docs too
-    short for a signature can only match exactly."""
-    import hashlib
-    from collections import defaultdict
-
-    from energydatalake_spark.text.dedup import PERM_MASK, _perm_constants
-
-    k = bands * rows
-    a, b = _perm_constants(k)
-
-    def sig_of(t):
-        toks = t.split(" ")
-        if len(toks) < n:
-            return None
-        s = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
-        if not s:
-            return None
-        hs = [int(hashlib.md5(x.encode()).hexdigest()[:8], 16) for x in s]
-        return [min((a[j] * h + b[j]) & PERM_MASK for h in hs) for j in range(k)]
-
-    def bands_of(sig):
-        return {
-            (bnd, hashlib.md5(
-                ",".join(str(v) for v in sig[bnd * rows : (bnd + 1) * rows])
-                .encode()
-            ).hexdigest())
-            for bnd in range(bands)
-        }
-
-    corpus_md5 = defaultdict(list)
-    for i, t in corpus.items():
-        corpus_md5[hashlib.md5(t.encode()).hexdigest()].append(i)
-    corpus_sigs = {i: sig_of(t) for i, t in corpus.items()}
-    corpus_bands = {
-        i: bands_of(s) for i, s in corpus_sigs.items() if s is not None
-    }
-    batch_sigs = {i: sig_of(t) for i, t in batch.items()}
-    batch_bands = {
-        i: bands_of(s) for i, s in batch_sigs.items() if s is not None
-    }
-    out = {}
-    for bid, t in batch.items():
-        h = hashlib.md5(t.encode()).hexdigest()
-        # Intra-batch tier (ADVICE r8): smaller-id batch docs count as
-        # already-seen alongside the corpus index.
-        exact = list(corpus_md5.get(h, [])) + [
-            b2
-            for b2, t2 in batch.items()
-            if b2 < bid and hashlib.md5(t2.encode()).hexdigest() == h
-        ]
-        if exact:
-            out[bid] = ("exact", min(exact))
-            continue
-        near = []
-        s = batch_sigs[bid]
-        if s is not None:
-            my_bands = batch_bands[bid]
-            older = list(corpus_bands.items()) + [
-                (b2, bb) for b2, bb in batch_bands.items() if b2 < bid
-            ]
-            for cid, cb in older:
-                if my_bands & cb:
-                    cs = corpus_sigs.get(cid, batch_sigs.get(cid))
-                    est = sum(x == y for x, y in zip(s, cs)) / k
-                    if est >= threshold:
-                        near.append(cid)
-        out[bid] = ("near_dup", min(near)) if near else ("accept", None)
-    return out
-
-
-@given(
-    st.lists(
-        st.lists(
-            st.sampled_from(["a", "b", "c"]), min_size=0, max_size=8
-        ).map(" ".join),
-        min_size=2,
-        max_size=7,
-    ),
-    st.data(),
-)
-@_prop_settings
-def test_incremental_ingest_matches_python_model(spark, texts, data):
-    """Three-letter alphabet makes exact dups, near dups (high
-    signature agreement), and short no-signature docs all common; the
-    model shares only the permutation constants with the pipeline.
-    The index is built fresh per example (tmp dir), append=False so
-    the verdict is a pure function of (corpus, batch)."""
-    import tempfile
-
-    from energydatalake_spark.pipelines.incremental import (
-        build_minhash_index,
-        incremental_ingest,
-    )
-
-    cut = max(1, len(texts) // 2)
-    corpus = {i: t for i, t in enumerate(texts[:cut])}
-    batch = {100 + i: t for i, t in enumerate(texts[cut:])}
-    if not batch:
-        batch = {100: texts[0]}
-    cdf = spark.createDataFrame(
-        list(corpus.items()), "doc_id bigint, text string"
-    )
-    bdf = spark.createDataFrame(
-        list(batch.items()), "doc_id bigint, text string"
-    )
-    with tempfile.TemporaryDirectory() as d:
-        build_minhash_index(cdf, d + "/idx")
-        got = {
-            r.doc_id: (r.verdict, r.matched_doc_id)
-            for r in incremental_ingest(bdf, d + "/idx", append=False).collect()
-        }
-    assert got == _py_incremental_ingest(corpus, batch)
-
-
 def _py_semantic_dedup(rows, cents, threshold):
     """Independent model of similarity.neardup.embedding_semantic_dedup:
     nearest-centroid assignment by cosine with the strict-> first-max /

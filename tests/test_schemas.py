@@ -5,6 +5,9 @@ mergeHistoricalWeather.py:71-91, is never applied)."""
 
 from __future__ import annotations
 
+import datetime as dt
+from decimal import Decimal
+
 import pytest
 
 from energydatalake_spark.io.schemas import (
@@ -16,7 +19,7 @@ from energydatalake_spark.io.schemas import (
 
 def test_apply_schema_types_and_order(spark):
     df = spark.createDataFrame(
-        [("12.5", "2024-03-01 00:00:00", "2024-03-01 00:00:00",
+        [("12.345", "2024-03-01 00:00:00", "2024-03-01 00:00:00",
           "2024-03-01 00:05:00")],
         ["load", "time", "interval_start", "interval_end"],  # shuffled order
     )
@@ -25,6 +28,18 @@ def test_apply_schema_types_and_order(spark):
     types = dict(out.dtypes)
     assert types["load"] == "decimal(10,2)"
     assert types["time"] == "timestamp"
+    # decimal(10,2) rounds HALF_UP, per README.md:115 of the reference
+    assert out.collect()[0]["load"] == Decimal("12.35")
+
+    # offset-stamped feeds parse through SOURCE_TS_FMT to the UTC instant
+    ts = "2024-01-02 03:04:05-05:00"
+    spp = spark.createDataFrame(
+        [("HB_NORTH", "9.87", ts, ts, ts)],
+        ["location", "spp", "time", "interval_start", "interval_end"],
+    )
+    row = apply_schema(spp, "spp").collect()[0]
+    assert row["interval_start"] == dt.datetime(2024, 1, 2, 8, 4, 5)  # session tz UTC
+    assert abs(row["spp"] - 9.87) < 1e-5
 
 
 def test_missing_column_fails_loudly(spark):

@@ -1,86 +1,16 @@
-"""Streaming tests: exactly-once file queue + windowed rollups."""
+"""Streaming tests: windowed rollups, sessionization, dedup, as-of and
+the hardened stream runner."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import functions as F
 
 from energydatalake_spark.io.readers import read_table
-from energydatalake_spark.pipelines.fixtures import generate_all
-from energydatalake_spark.streaming.file_queue import stream_folder_to_table
 from energydatalake_spark.streaming.windows import hourly_rollup, run_stream_to_memory
 
 from tests.conftest import SF_SMOKE
-
-LOAD_SCHEMA = "`Time` string, `Interval Start` string, `Interval End` string, `Load` string"
-
-
-def test_file_queue_exactly_once(spark, tmp_path):
-    layout = generate_all(str(tmp_path / "src"))
-    src = layout["load_latest"]
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    n_csv_rows = sum(
-        len(open(f).readlines()) - 1 for f in glob.glob(os.path.join(src, "*.csv"))
-    )
-
-    stream_folder_to_table(spark, src, LOAD_SCHEMA, sink, ckpt)
-    assert spark.read.parquet(sink).count() == n_csv_rows
-
-    # Second pass with the same checkpoint: files already consumed → no
-    # duplicate appends (the upgrade over the reference's archive loop).
-    stream_folder_to_table(spark, src, LOAD_SCHEMA, sink, ckpt)
-    assert spark.read.parquet(sink).count() == n_csv_rows
-
-    # A new file arrives → only its rows are appended.
-    extra = os.path.join(src, "late_arrival.csv")
-    with open(extra, "w") as f:
-        f.write("Time,Interval Start,Interval End,Load\n")
-        f.write("2024-03-02 00:00:00,2024-03-02 00:00:00,2024-03-02 00:05:00,41000.5\n")
-    stream_folder_to_table(spark, src, LOAD_SCHEMA, sink, ckpt)
-    assert spark.read.parquet(sink).count() == n_csv_rows + 1
-
-
-def test_file_queue_archive(spark, tmp_path):
-    layout = generate_all(str(tmp_path / "src"))
-    src = layout["load_latest"]
-    archive = str(tmp_path / "archived")
-    n_src = len(glob.glob(os.path.join(src, "*.csv")))
-    stream_folder_to_table(
-        spark,
-        src,
-        LOAD_SCHEMA,
-        str(tmp_path / "sink"),
-        str(tmp_path / "ckpt"),
-        archive_dir=archive,
-        max_files_per_trigger=1,
-    )
-    import time
-
-    time.sleep(2)  # cleaner thread
-    remaining = glob.glob(os.path.join(src, "*.csv"))
-    archived = glob.glob(os.path.join(archive, "**", "*.csv"), recursive=True)
-    # Spark archives batch N's files when batch N+1 starts → everything
-    # except the final batch's file is moved within one pass.
-    assert len(archived) == n_src - 1, (archived, remaining)
-    assert len(remaining) == 1
-    # A later pass (with a new file to process) sweeps the remainder.
-    with open(os.path.join(src, "next_tick.csv"), "w") as f:
-        f.write("Time,Interval Start,Interval End,Load\n")
-        f.write("2024-03-02 00:00:00,2024-03-02 00:00:00,2024-03-02 00:05:00,41000.5\n")
-    stream_folder_to_table(
-        spark,
-        src,
-        LOAD_SCHEMA,
-        str(tmp_path / "sink"),
-        str(tmp_path / "ckpt"),
-        archive_dir=archive,
-        max_files_per_trigger=1,
-    )
-    time.sleep(2)
-    assert len(glob.glob(os.path.join(archive, "**", "*.csv"), recursive=True)) == n_src
 
 
 def test_hourly_rollup_matches_batch(spark):
@@ -101,74 +31,6 @@ def test_hourly_rollup_matches_batch(spark):
     expect = {(r.hour_start, r.event_type): r.n_rows for r in batch}
     actual = {(r.hour_start, r.event_type): r.n_rows for r in got.collect()}
     assert actual == expect and len(actual) > 100
-
-
-def _write_session_batch(path, rows):
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # parquet TIMESTAMP(MICROS)
-    pdf.to_parquet(path)
-
-
-def test_sessionize_stream_cross_batch_state(spark, tmp_path):
-    """State must carry across micro-batches: events within the gap in a
-    later batch extend the session; a gap-exceeding event closes it and
-    the closed session is emitted with merged counts."""
-    import pandas as pd
-
-    from energydatalake_spark.streaming.sessions import sessionize_stream
-
-    src = tmp_path / "sessions_src"
-    src.mkdir()
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    h = pd.Timedelta(hours=1)
-    # batch 1: user 1 has two events 1h apart (gap=4h -> same session)
-    _write_session_batch(
-        src / "b1.parquet",
-        [(1, t0, 1.0), (1, t0 + h, 2.0), (2, t0, 5.0)],
-    )
-    # batch 2: user 1 event 2h later (extends session), then one 10h
-    # later (closes it); user 2 event 20h later (closes user 2's).
-    _write_session_batch(
-        src / "b2.parquet",
-        [
-            (1, t0 + 3 * h, 3.0),
-            (1, t0 + 13 * h, 4.0),
-            (2, t0 + 20 * h, 6.0),
-        ],
-    )
-    schema = "user_id bigint, ts timestamp, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    out = sessionize_stream(stream, gap_minutes=240)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_sessions")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = {
-        (r.user_id, r.session_start_us): (r.n_events, r.sum_value)
-        for r in spark.table("t_sessions").collect()
-    }
-    us = lambda t: int(t.value // 1000)
-    # user 1's first session: 3 events (2 from batch 1 + 1 from batch 2)
-    assert rows[(1, us(t0))] == (3, 6.0)
-    # user 2's first session closed by the 20h-later event
-    assert rows[(2, us(t0))] == (1, 5.0)
-    # user 1's @13h session closed by EVENT-TIME TIMEOUT: the watermark
-    # (20h - 1h) passed its gap deadline (13h + 4h)
-    assert rows[(1, us(t0 + 13 * h))] == (1, 4.0)
-    # user 2's @20h session still open: deadline 24h > watermark 19h
-    assert len(rows) == 3
 
 
 def test_sessionize_batch_matches_duckdb(spark):
@@ -231,83 +93,6 @@ def test_streaming_dedup_cross_batch(spark, tmp_path):
     finally:
         q.stop()
     assert got == ["a", "b", "c"]  # 'a' and 'b' once despite 2+ arrivals
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Watermark-bounded variant: duplicates inside the horizon are
-    suppressed; state does not require keeping every key forever."""
-    import os
-    from datetime import datetime
-
-    import pandas as pd
-
-    from energydatalake_spark.streaming.dedup import (
-        streaming_dedup_within_watermark,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    t0 = datetime(2024, 3, 1, 0, 0, 0)
-    pdf = pd.DataFrame({"k": ["a", "a", "b"], "ts": [t0, t0, t0]})
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # parquet TIMESTAMP(MICROS)
-    pdf.to_parquet(os.path.join(src, "b0.parquet"))
-    stream = spark.readStream.schema("k string, ts timestamp").parquet(src)
-    out = streaming_dedup_within_watermark(stream, ["k"], "ts", "10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sd_watermark")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = sorted(r.k for r in spark.table("sd_watermark").collect())
-    finally:
-        q.stop()
-    assert got == ["a", "b"]  # in-horizon duplicate suppressed
-
-
-def test_stream_upsert_row_exactly_once_across_redelivery(spark, tmp_path):
-    """Checkpoint dedups FILES; the MERGE sink must additionally dedup
-    ROWS when the same content is re-delivered under a new name (a
-    producer retry / racing cron — invisible to the file checkpoint)."""
-    import os
-
-    import pandas as pd
-
-    from energydatalake_spark.streaming.file_queue import stream_folder_upsert
-
-    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
-    os.makedirs(src)
-    rows = pd.DataFrame(
-        {"k": ["1", "2"], "t": ["2024-03-01 00:00:00", "2024-03-01 01:00:00"],
-         "v": ["10.5", "20.5"]}
-    )
-    rows.to_csv(os.path.join(src, "a.csv"), index=False)
-
-    from pyspark.sql import functions as F
-
-    def typed(df):
-        return df.select(
-            F.col("k").cast("bigint").alias("k"),
-            F.to_timestamp("t").alias("t"),
-            F.col("v").cast("double").alias("v"),
-        )
-
-    kw = dict(schema="k string, t string, v string", sink_path=sink,
-              checkpoint_dir=ckpt, keys=["k"], partition_date_col="t",
-              transform=typed)
-    assert stream_folder_upsert(spark, src, **kw) >= 1
-    # same content, NEW file name + one genuinely new row
-    pd.concat(
-        [rows, pd.DataFrame({"k": ["3"], "t": ["2024-03-02 02:00:00"], "v": ["30.5"]})]
-    ).to_csv(os.path.join(src, "b.csv"), index=False)
-    stream_folder_upsert(spark, src, **kw)
-    got = sorted((r.k, r.v) for r in spark.read.parquet(sink).collect())
-    assert got == [(1, 10.5), (2, 20.5), (3, 30.5)]  # no duplicates, new row in
-    # third pass with nothing new: clean no-op
-    stream_folder_upsert(spark, src, **kw)
-    assert spark.read.parquet(sink).count() == 3
 
 
 def test_registry_streaming_dedup_uses_stream_not_fallback(spark):
@@ -464,158 +249,3 @@ def test_streaming_asof_matches_across_batches(spark, tmp_path):
     ).collect()
     assert len(reduced) == 1
     assert reduced[0].purchase_value == 20.0
-
-
-def test_stream_cdc_apply_deletes_and_exactly_once(spark, tmp_path):
-    """CDC change feed through the streaming sink: insert batch, then
-    a delete+update batch, applied in file order with checkpointed
-    exactly-once — final table equals the change log's net effect, and
-    a re-run of the same source adds nothing."""
-    import json
-    import os
-
-    from energydatalake_spark.streaming.file_queue import stream_cdc_apply
-
-    src = str(tmp_path / "cdc_src")
-    os.makedirs(src)
-    sink = str(tmp_path / "cdc_sink")
-    ckpt = str(tmp_path / "cdc_ckpt")
-    schema = "k string, v bigint, t string, op string"
-
-    def write_batch(name, rows):
-        with open(os.path.join(src, name), "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write_batch("b1.json", [
-        {"k": "a", "v": 1, "t": "2024-03-01 10:00:00", "op": "I"},
-        {"k": "b", "v": 2, "t": "2024-03-02 10:00:00", "op": "I"},
-    ])
-    n = stream_cdc_apply(
-        spark, src, schema, sink, ckpt, keys=["k"], partition_date_col="t"
-    )
-    assert n == 1
-    write_batch("b2.json", [
-        {"k": "a", "v": 1, "t": "2024-03-01 10:00:00", "op": "D"},
-        {"k": "b", "v": 20, "t": "2024-03-02 10:00:00", "op": "U"},
-        {"k": "c", "v": 3, "t": "2024-03-03 10:00:00", "op": "I"},
-    ])
-    stream_cdc_apply(
-        spark, src, schema, sink, ckpt, keys=["k"], partition_date_col="t"
-    )
-    got = {(r.k, r.v) for r in spark.read.parquet(sink).collect()}
-    assert got == {("b", 20), ("c", 3)}
-    # exactly-once: replaying the unchanged source applies no batch
-    n3 = stream_cdc_apply(
-        spark, src, schema, sink, ckpt, keys=["k"], partition_date_col="t"
-    )
-    assert n3 == 0
-    assert {(r.k, r.v) for r in spark.read.parquet(sink).collect()} == got
-
-
-def _drop_latest_commit(ckpt: str) -> int:
-    """Simulate a kill between the foreachBatch sink write and the
-    checkpoint commit: delete the commit-log record of the LAST batch
-    while leaving its offsets record. That on-disk state is byte-wise
-    what a crash at that instant leaves (the offset is claimed, the
-    commit never landed), so a restart replays the batch with the
-    exact same source files."""
-    import os
-
-    commits = os.path.join(ckpt, "commits")
-    ids = sorted(
-        int(n) for n in os.listdir(commits) if n.lstrip("-").isdigit()
-    )
-    os.remove(os.path.join(commits, str(ids[-1])))
-    # local ChecksumFs keeps a .N.crc sidecar per commit file; a real
-    # crash never wrote either, and a stale sidecar makes the replayed
-    # commit's rename fail (FileAlreadyExistsException on the .crc)
-    crc = os.path.join(commits, f".{ids[-1]}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    return ids[-1]
-
-
-def test_stream_upsert_exactly_once_across_kill_mid_batch(spark, tmp_path):
-    """VERDICT r15 #8: the §2.9 "crash between sink write and
-    checkpoint commit -> duplicate append" failure mode, tested
-    directly rather than by redelivery analogy. The crash is injected
-    with _drop_latest_commit AFTER the sink write landed; the restart
-    replays the killed batch. A naive append sink duplicates every
-    replayed row (proven below, same injection); stream_folder_upsert's
-    MERGE sink must keep the table row-identical."""
-    import os
-
-    import pandas as pd
-
-    from energydatalake_spark.streaming.file_queue import stream_folder_upsert
-
-    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
-    os.makedirs(src)
-    pd.DataFrame(
-        {"k": ["1", "2"], "t": ["2024-03-01 00:00:00", "2024-03-01 01:00:00"],
-         "v": ["10.5", "20.5"]}
-    ).to_csv(os.path.join(src, "a.csv"), index=False)
-
-    from pyspark.sql import functions as F
-
-    def typed(df):
-        return df.select(
-            F.col("k").cast("bigint").alias("k"),
-            F.to_timestamp("t").alias("t"),
-            F.col("v").cast("double").alias("v"),
-        )
-
-    kw = dict(schema="k string, t string, v string", sink_path=sink,
-              checkpoint_dir=ckpt, keys=["k"], partition_date_col="t",
-              transform=typed)
-    assert stream_folder_upsert(spark, src, **kw) >= 1
-    # second file -> second batch, so the killed batch is non-initial
-    pd.DataFrame(
-        {"k": ["3"], "t": ["2024-03-02 02:00:00"], "v": ["30.5"]}
-    ).to_csv(os.path.join(src, "b.csv"), index=False)
-    stream_folder_upsert(spark, src, **kw)
-    before = sorted((r.k, r.v) for r in spark.read.parquet(sink).collect())
-    assert before == [(1, 10.5), (2, 20.5), (3, 30.5)]
-
-    _drop_latest_commit(ckpt)
-    # restart = the post-crash cron tick; Spark replays the torn batch
-    assert stream_folder_upsert(spark, src, **kw) >= 1
-    after = sorted((r.k, r.v) for r in spark.read.parquet(sink).collect())
-    assert after == before  # exactly-once at the ROW level
-
-    # ---- counterfactual: the same injection against a naive append
-    # sink (the reference's write-then-archive shape) DOES duplicate —
-    # proving the injection really replays the batch, and that the
-    # MERGE sink (not luck) is what preserved the table above.
-    src2, sink2, ckpt2 = (
-        str(tmp_path / d) for d in ("src2", "sink2", "ckpt2")
-    )
-    os.makedirs(src2)
-    pd.DataFrame(
-        {"k": ["1", "2"], "t": ["2024-03-01 00:00:00", "2024-03-01 01:00:00"],
-         "v": ["10.5", "20.5"]}
-    ).to_csv(os.path.join(src2, "a.csv"), index=False)
-
-    def naive_pass() -> None:
-        stream = (
-            spark.readStream.schema("k string, t string, v string")
-            .option("header", "true")
-            .csv(src2)
-        )
-        q = (
-            typed(stream)
-            .writeStream.foreachBatch(
-                lambda bdf, _eid: bdf.write.mode("append").parquet(sink2)
-            )
-            .option("checkpointLocation", ckpt2)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    naive_pass()
-    assert spark.read.parquet(sink2).count() == 2
-    _drop_latest_commit(ckpt2)
-    naive_pass()
-    assert spark.read.parquet(sink2).count() == 4  # duplicated rows

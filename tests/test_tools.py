@@ -5,6 +5,7 @@ table linearly, so those properties are pinned here."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import subprocess
 import sys
@@ -290,3 +291,93 @@ _TOOLS_DIR = Path(__file__).resolve().parent.parent / "tools"
 )
 def test_tool_modules_import(name):
     importlib.import_module(f"tools.{name}")
+
+
+# ------------------------------------------------------ package reachability
+# One implementation per capability: every package module must be
+# imported (transitively) from a real entry point — a registry plan, the
+# ERCOT pipelines, the CLI, the benchmark or a tool — not only from
+# tests. Package ``__init__`` re-exports are not followed as edges, so a
+# module that is only re-exported still counts as unreached; a name
+# imported through a package resolves to the submodule defining it, and
+# functions an ``__init__`` defines itself (``release_caches``) count.
+
+_REPO = _TOOLS_DIR.parent
+_PKG = "energydatalake_spark"
+_ROOTS = (
+    f"{_PKG}/plans/registry.py",
+    f"{_PKG}/plans/llm_ops.py",
+    f"{_PKG}/pipelines/ercot.py",
+    f"{_PKG}/__main__.py",
+    "perfbench/*.py",
+    "tools/*.py",
+    "bench.py",
+    "__spark_entry__.py",
+)
+
+
+def _module_file(dotted: str) -> Path | None:
+    base = _REPO.joinpath(*dotted.split("."))
+    for p in (base.with_suffix(".py"), base / "__init__.py"):
+        if p.is_file():
+            return p
+    return None
+
+
+def _reexport_source(init: Path, name: str) -> Path | None:
+    for node in ast.walk(ast.parse(init.read_text())):
+        if isinstance(node, ast.ImportFrom) and node.module and any(
+            (a.asname or a.name) == name for a in node.names
+        ):
+            return _module_file(node.module)
+    return None
+
+
+def _package_imports(path: Path) -> set[Path]:
+    tree = ast.parse(path.read_text())
+    if path.name == "__init__.py":
+        # only code defined in the package itself, not its re-exports
+        tree = ast.Module(
+            [n for n in tree.body if isinstance(n, ast.FunctionDef)], []
+        )
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            targets = [(a.name, None) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            targets = [(node.module, a.name) for a in node.names]
+        else:
+            continue
+        for mod, name in targets:
+            p = _module_file(mod) if mod.split(".")[0] == _PKG else None
+            if p is None:
+                continue
+            if name and p.name == "__init__.py":
+                p = (
+                    _module_file(f"{mod}.{name}")
+                    or _reexport_source(p, name)
+                    or p
+                )
+            out.add(p)
+    return out
+
+
+def test_package_modules_reached_outside_tests():
+    todo = [p for pattern in _ROOTS for p in _REPO.glob(pattern)]
+    reached: set[Path] = set()
+    while todo:
+        p = todo.pop()
+        if p in reached:
+            continue
+        reached.add(p)
+        # importing a submodule runs its parent packages' __init__
+        for parent in p.relative_to(_REPO).parents:
+            if parent.parts[:1] == (_PKG,):
+                todo.append(_REPO / parent / "__init__.py")
+        todo.extend(_package_imports(p))
+    unreached = sorted(
+        str(p.relative_to(_REPO))
+        for p in (_REPO / _PKG).rglob("*.py")
+        if p not in reached
+    )
+    assert not unreached, f"package modules only tests reach: {unreached}"
