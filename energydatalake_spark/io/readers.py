@@ -85,6 +85,54 @@ def _csv_header(path: str) -> list[str] | None:
     return names
 
 
+def read_jsonl_folder(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | str,
+    bad_records_col: str = "_corrupt_record",
+) -> DataFrame | None:
+    """JSON-Lines folder scan — the interchange format LLM corpora
+    actually ship in. Same contract as :func:`read_csv_folder`:
+    explicit schema ONLY (never inference — at 100 TB that is an extra
+    full pass, and silent drift), empty folder → clean ``None`` no-op.
+
+    Malformed lines are captured in ``bad_records_col`` (PERMISSIVE
+    mode) so one corrupt document quarantines itself instead of killing
+    a multi-hour ingest; callers split on ``bad_records_col IS NULL``
+    to route rejects to a dead-letter sink. Each file splits by line,
+    so a folder of .jsonl shards parallelizes like any text source.
+
+    Spark caveat: a query that references ONLY the corrupt column is
+    disallowed (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — when counting or
+    exporting rejects, select the data columns alongside (the
+    dead-letter sink wants the full row anyway).
+    """
+    # Accept compressed shards too — our own write_jsonl emits .json.gz.
+    if not any(
+        folder_has_files(path, suf)
+        for suf in (".jsonl", ".json", ".jsonl.gz", ".json.gz")
+    ):
+        return None
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if bad_records_col in schema.fieldNames():
+        raise ValueError(
+            f"read_jsonl_folder: schema already contains "
+            f"{bad_records_col!r} — the quarantine column is appended "
+            f"automatically; pass a different bad_records_col or drop "
+            f"it from the schema"
+        )
+    schema = T.StructType(
+        list(schema.fields) + [T.StructField(bad_records_col, T.StringType())]
+    )
+    return (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", bad_records_col)
+        .json(path)
+    )
+
+
 def _footer_probe(path: str) -> tuple[list[str], list[str], list[tuple[str, str]]]:
     """Footer-only schema probe (no data read). Returns
     ``(nanos_cols, naive_ts_cols, all_cols)``:
@@ -255,3 +303,45 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Session tz pins UTC: NTZ cast keeps the instant, yields the
     # watermark-capable LTZ type; dtype branching per column as in batch.
     return _normalize_time_axis(stream, ns_cols, ntz_cols)
+
+
+def read_orc_folder(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | str | None = None,
+) -> DataFrame | None:
+    """ORC folder scan — the warehouse interchange format Hive-era
+    lakes ship in (same columnar/footer-statistics model as Parquet;
+    Spark's vectorized ORC reader gives the identical pushdown/pruning
+    behavior, so queries keep their plans when sources arrive as ORC).
+    Same contract as the CSV/JSONL readers: empty folder → clean
+    ``None`` no-op; with ``schema`` given, drift fails LOUDLY (name or
+    type mismatch) instead of silently widening — the reader is a
+    contract, not an inference."""
+    from energydatalake_spark.io.schemas import SchemaDriftError
+
+    if not folder_has_files(path, ".orc"):
+        return None
+    df = spark.read.orc(path)
+    if schema is not None:
+        if isinstance(schema, str):
+            schema = T.StructType.fromDDL(schema)
+        got = {f.name: f.dataType for f in df.schema.fields}
+        want = {f.name: f.dataType for f in schema.fields}
+        missing = [
+            f"{n}:{t.simpleString()}" for n, t in want.items() if got.get(n) != t
+        ]
+        extra = [
+            f"{n}:{t.simpleString()}" for n, t in got.items() if want.get(n) != t
+        ]
+        if missing or extra:
+            raise SchemaDriftError(path, missing, extra)
+    return df
+
+
+def write_orc(df: DataFrame, path: str, compression: str = "zstd") -> None:
+    """ORC export (overwrite) — zstd by default, matching the parquet
+    sink's codec so the two formats' files are cost-comparable."""
+    df.write.format("orc").option("compression", compression).mode(
+        "overwrite"
+    ).save(path)

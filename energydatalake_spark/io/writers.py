@@ -11,13 +11,13 @@ depend on a table format's transaction log. On a Delta/Iceberg
 deployment the same call-site maps 1:1 onto ``MERGE ... WHEN NOT
 MATCHED INSERT`` — a format swap, not a semantics change.
 
-Read-back scope: the driver collects the batch's distinct ``dt``
-values (batch-sized) and lists the target's ``dt=`` directories once;
-only touched directories that exist are read back. Untouched
-partitions are neither listed for schema nor scanned, so a merge costs
-what its batch costs, not what the warehouse holds. The listing is a
-snapshot: the merge assumes a single writer per table, matching the
-reference's Scheduler-serialized jobs.
+Read-back scope (both merges): the driver collects the batch's
+distinct ``dt`` values (batch-sized) and lists the target's ``dt=``
+directories once; only touched directories that exist are read back.
+Untouched partitions are neither listed for schema nor scanned, so a
+merge costs what its batch costs, not what the warehouse holds. The
+listing is a snapshot: the merges assume a single writer per table,
+matching the reference's Scheduler-serialized jobs.
 
 Partitioning: time-series tables partition by event date derived from
 the interval start (SURVEY.md §4 "partition pruning") so that the four
@@ -152,3 +152,132 @@ def overwrite_table(df: DataFrame, path: str) -> None:
 def write_csv(df: DataFrame, path: str) -> None:
     """CSV export with header, overwrite (S6, mergeHistoricalWeather.py:62-66)."""
     df.write.format("csv").option("header", "true").mode("overwrite").save(path)
+
+
+def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
+    """JSON-Lines export (LLM-corpus interchange twin of the jsonl
+    reader). Gzip by default: jsonl text compresses ~10×, and the
+    format stays line-splittable per FILE — shard count (= input
+    partitions) is the parallelism unit downstream, so repartition
+    before writing if consumers need more/fewer shards."""
+    writer = df.write.format("json").mode("overwrite")
+    if compression:
+        writer = writer.option("compression", compression)
+    writer.save(path)
+
+
+def apply_cdc_batch(
+    df: DataFrame,
+    path: str,
+    keys: list[str],
+    op_col: str = "op",
+    seq_col: str | None = None,
+    partition_date_col: str | None = None,
+) -> None:
+    """Full CDC MERGE on the parquet warehouse: apply a change batch of
+    inserts/updates/deletes (``op_col`` ∈ {'I','U','D'}) keyed on
+    ``keys`` — the delete-capable completion of ``upsert_table``'s
+    insert-only MERGE. Maps 1:1 onto Delta/Iceberg
+    ``MERGE ... WHEN MATCHED [AND op='D'] THEN DELETE / UPDATE /
+    WHEN NOT MATCHED THEN INSERT`` — same call-site, same semantics.
+
+    Semantics: within the batch, the LATEST change per key wins
+    (``seq_col`` order — a key inserted then deleted in one batch nets
+    to absent); then existing rows for batch keys are replaced by the
+    surviving I/U images and dropped for D. ``seq_col`` must be unique
+    per key within a batch (every real CDC stream's LSN/offset is) —
+    two same-key rows with EQUAL seq have no defined winner.
+
+    Plain parquet has no row-level update, so the rewrite unit is the
+    PARTITION: only the ``dt`` partitions the batch touches are read
+    back (same driver-side listing as ``upsert_table``), merged, and
+    atomically swapped via dynamic partition overwrite
+    (``partitionOverwriteMode=dynamic`` — untouched partitions are
+    not listed, read, or rewritten; at 100 TB × years that is the
+    difference between a merge and a table rewrite). A batch that
+    touches no existing partition appends its surviving rows. Requires
+    the key→partition mapping to be stable (event-date-keyed tables,
+    the reference's shape); a key that MOVES partitions needs a
+    format-level MERGE (Delta) or a two-phase delete+insert.
+    Unpartitioned tables rewrite the whole folder (documented
+    degenerate case — partition them).
+
+    Single-writer, like every sink here (Scheduler-serialized jobs).
+    """
+    import shutil
+
+    from energydatalake_spark.operators.clean import dedup_latest
+
+    spark = df.sparkSession
+    # Validate the batch's op domain up front (ADVICE r7): a NULL op
+    # would silently behave as a DELETE (null predicate fails the
+    # op != 'D' filter yet the key still anti-joins existing rows) and
+    # any other string as an upsert. Malformed batches fail loudly.
+    bad_op = (
+        df.filter(
+            F.col(op_col).isNull() | ~F.col(op_col).isin("I", "U", "D")
+        )
+        .limit(1)
+        .collect()
+    )
+    if bad_op:
+        raise ValueError(
+            f"apply_cdc_batch: {op_col!r} must be one of 'I','U','D' "
+            f"and non-null; got {bad_op[0][op_col]!r}"
+        )
+    partitioned = partition_date_col is not None
+    if partitioned:
+        df = df.withColumn("dt", F.to_date(F.col(partition_date_col)))
+    if seq_col is not None:
+        df = dedup_latest(df, keys, seq_col, tiebreak=keys)
+    else:
+        df = df.dropDuplicates(keys)
+    df = df.persist()  # batch-sized; feeds dt list, anti-join, union
+    try:
+        survivors = df.filter(F.col(op_col) != F.lit("D")).drop(op_col)
+        entries = _table_entries(path)
+        touched, existing = _touched_readback(df, path, entries, partitioned)
+        if existing is None:
+            _append(survivors, path, partitioned)
+            return
+        batch_keys = df.select(*[F.col(f"`{k}`") for k in keys]).distinct()
+        anti_cond = reduce(
+            lambda a, b: a & b,
+            [existing[f"`{k}`"].eqNullSafe(batch_keys[f"`{k}`"]) for k in keys],
+        )
+        # null-safe, same as _fresh_rows: a delete for a null key must
+        # match the null-key row it targets
+        kept = existing.join(batch_keys, anti_cond, "left_anti")
+        merged = kept.unionByName(survivors.select(*kept.columns))
+        # The merge READS the path it overwrites — materialize before
+        # the write (touched-partitions-sized, not table-sized; the
+        # unpartitioned degenerate case is table-sized, as documented).
+        merged = merged.localCheckpoint()
+        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            writer = merged.write.format("parquet").mode("overwrite")
+            if partitioned:
+                writer = writer.partitionBy("dt")
+            writer.save(path)
+        finally:
+            spark.conf.set(
+                "spark.sql.sources.partitionOverwriteMode", prev_mode
+            )
+        if partitioned:
+            # Dynamic overwrite cannot write an EMPTY partition: a dt
+            # whose every row was deleted is absent from `merged` and
+            # its stale directory would survive — remove the emptied
+            # ones. Null dt participates too (ADVICE r7): its rows live
+            # under dt=__HIVE_DEFAULT_PARTITION__, so a delete batch
+            # that empties it must also remove the directory, or the
+            # pre-delete images resurrect.
+            remaining = {
+                r.dt for r in merged.select("dt").distinct().collect()
+            }
+            for d in touched - remaining:
+                part_dir = os.path.join(path, _partition_dir(d))
+                if os.path.isdir(part_dir):
+                    shutil.rmtree(part_dir)
+    finally:
+        df.unpersist()

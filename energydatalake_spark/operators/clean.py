@@ -64,3 +64,45 @@ def null_profile(df: DataFrame) -> DataFrame:
     return df.select(
         [F.sum(F.col(c).isNull().cast("int")).alias(c) for c in df.columns]
     )
+
+
+def validate_rows(
+    df: DataFrame,
+    rules: dict[str, "str | F.Column"],
+    out_col: str = "failed_rules",
+) -> DataFrame:
+    """Row-level expectations (the DLT ``EXPECT`` shape, on plain
+    DataFrames): each rule is a boolean expression that must hold;
+    ``out_col`` lists the names of the rules a row FAILS (empty array
+    = valid row). A rule evaluating to NULL counts as failed — an
+    expectation that cannot be decided has not held, the same
+    null-is-not-a-pass rule the CDC op validator applies.
+
+    Pure per-row expressions (one projection, no shuffle, codegen'd);
+    compose with sinks via :func:`split_valid`."""
+    checks = [
+        F.when(
+            ~F.coalesce(
+                F.expr(rule) if isinstance(rule, str) else rule, F.lit(False)
+            ),
+            F.lit(name),
+        )
+        for name, rule in rules.items()
+    ]
+    return df.withColumn(out_col, F.array_compact(F.array(*checks)))
+
+
+def split_valid(
+    df: DataFrame,
+    rules: dict[str, "str | F.Column"],
+) -> tuple[DataFrame, DataFrame]:
+    """Expectation gate: ``(good, quarantine)`` — good rows drop the
+    audit column, quarantined rows keep ``failed_rules`` for the
+    dead-letter sink (the jsonl corrupt-line quarantine's row-level
+    sibling). The input plan is shared; at scale write both sides from
+    one pass (``persist`` or foreachBatch) rather than triggering the
+    lineage twice."""
+    flagged = validate_rows(df, rules)
+    good = flagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
+    bad = flagged.filter(F.size("failed_rules") > 0)
+    return good, bad

@@ -1,4 +1,7 @@
-from energydatalake_spark.streaming.dedup import streaming_dedup
+from energydatalake_spark.streaming.dedup import (
+    streaming_dedup,
+    streaming_dedup_within_watermark,
+)
 from energydatalake_spark.streaming.sessions import sessionize, sessionize_sql
 from energydatalake_spark.streaming.windows import hourly_rollup, run_stream_to_memory
 
@@ -8,4 +11,5 @@ __all__ = [
     "sessionize",
     "sessionize_sql",
     "streaming_dedup",
+    "streaming_dedup_within_watermark",
 ]

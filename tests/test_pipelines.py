@@ -521,3 +521,166 @@ def test_upsert_concurrent_writer_boundary_is_documented(spark, tmp_path):
 
     n_race = spark.read.parquet(path).filter(F.col("k") == "race").count()
     assert n_race == 2  # the documented lost-update: one key, two rows
+
+
+def test_apply_cdc_batch_matches_duckdb_merge(spark, tmp_path):
+    """Delete-capable CDC MERGE replayed against DuckDB applying the
+    relational definition (delete batch keys, insert surviving
+    latest-per-key images): final tables must match row-for-row across
+    batches covering update, delete, delete-then-reinsert,
+    insert+delete netting out within one batch, and a null key."""
+    import duckdb
+
+    from energydatalake_spark.io.writers import apply_cdc_batch
+
+    path = str(tmp_path / "cdc_sink")
+    schema = "k string, v bigint, t string, op string, seq bigint"
+    batches = [
+        # seed
+        [("a", 1, "2024-01-01 00:00:00", "I", 1),
+         ("b", 2, "2024-01-01 01:00:00", "I", 2),
+         ("c", 3, "2024-01-02 00:00:00", "I", 3),
+         (None, 9, "2024-01-02 01:00:00", "I", 4)],
+        # update a, delete b, insert+delete d (nets out), update null key
+        [("a", 10, "2024-01-01 00:00:00", "U", 5),
+         ("b", 2, "2024-01-01 01:00:00", "D", 6),
+         ("d", 4, "2024-01-01 02:00:00", "I", 7),
+         ("d", 4, "2024-01-01 02:00:00", "D", 8),
+         (None, 90, "2024-01-02 01:00:00", "U", 9)],
+        # reinsert b, delete a; in-batch seq ordering: c updated then
+        # deleted then updated again — last (highest seq) wins
+        [("b", 20, "2024-01-01 01:00:00", "I", 10),
+         ("a", 10, "2024-01-01 00:00:00", "D", 11),
+         ("c", 31, "2024-01-02 00:00:00", "U", 12),
+         ("c", 3, "2024-01-02 00:00:00", "D", 13),
+         ("c", 32, "2024-01-02 00:00:00", "U", 14)],
+    ]
+    for rows in batches:
+        df = spark.createDataFrame(rows, schema).withColumn(
+            "t", F.to_timestamp("t")
+        )
+        apply_cdc_batch(
+            df, path, keys=["k"], op_col="op", seq_col="seq",
+            partition_date_col="t",
+        )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE target (k VARCHAR, v BIGINT, t TIMESTAMP)")
+    for rows in batches:
+        con.execute(
+            "CREATE OR REPLACE TABLE batch (k VARCHAR, v BIGINT, t TIMESTAMP, op VARCHAR, seq BIGINT)"
+        )
+        con.executemany("INSERT INTO batch VALUES (?, ?, ?, ?, ?)", rows)
+        con.execute("""
+            CREATE OR REPLACE TABLE latest AS
+            SELECT k, v, t, op FROM (
+              SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY k ORDER BY seq DESC) AS rn FROM batch
+            ) WHERE rn = 1
+        """)
+        con.execute("""
+            DELETE FROM target t2 WHERE EXISTS (
+              SELECT 1 FROM latest l WHERE l.k IS NOT DISTINCT FROM t2.k)
+        """)
+        con.execute(
+            "INSERT INTO target SELECT k, v, t FROM latest WHERE op <> 'D'"
+        )
+    nonefirst = lambda r: (r[0] is None, r)  # noqa: E731
+    want = sorted(
+        con.execute("SELECT k, v, CAST(t AS VARCHAR) FROM target").fetchall(),
+        key=nonefirst,
+    )
+    got = sorted(
+        (
+            (r.k, r.v, str(r.t))
+            for r in spark.read.parquet(path).select("k", "v", "t").collect()
+        ),
+        key=nonefirst,
+    )
+    assert got == want
+    # expected final state, spelled out: a deleted, b reinserted (20),
+    # c last-update (32), d netted out, null key updated (90)
+    assert [(k, v) for k, v, _ in got] == [("b", 20), ("c", 32), (None, 90)]
+
+
+def test_apply_cdc_batch_drops_fully_deleted_partition(spark, tmp_path):
+    """Dynamic partition overwrite cannot rewrite a partition to empty;
+    a dt whose rows were ALL deleted must still disappear (stale
+    directory removed), while untouched partitions keep their files."""
+    import glob
+    import os
+
+    from energydatalake_spark.io.writers import apply_cdc_batch
+
+    path = str(tmp_path / "cdc_sink2")
+    schema = "k string, v bigint, t string, op string, seq bigint"
+    seed = [("a", 1, "2024-03-01 10:00:00", "I", 1),
+            ("b", 2, "2024-03-02 10:00:00", "I", 2)]
+    df = spark.createDataFrame(seed, schema).withColumn("t", F.to_timestamp("t"))
+    apply_cdc_batch(df, path, keys=["k"], seq_col="seq", partition_date_col="t")
+    files_untouched = set(glob.glob(os.path.join(path, "dt=2024-03-02", "*.parquet")))
+
+    batch = [("a", 1, "2024-03-01 10:00:00", "D", 3)]
+    df2 = spark.createDataFrame(batch, schema).withColumn("t", F.to_timestamp("t"))
+    apply_cdc_batch(df2, path, keys=["k"], seq_col="seq", partition_date_col="t")
+
+    assert not os.path.isdir(os.path.join(path, "dt=2024-03-01"))
+    # untouched partition: same physical files (not rewritten)
+    assert set(glob.glob(os.path.join(path, "dt=2024-03-02", "*.parquet"))) == files_untouched
+    rows = spark.read.parquet(path).collect()
+    assert [(r.k, r.v) for r in rows] == [("b", 2)]
+
+
+def test_apply_cdc_batch_drops_emptied_null_dt_partition(spark, tmp_path):
+    """ADVICE r7 (medium): a delete batch that empties the null-dt
+    partition (dt=__HIVE_DEFAULT_PARTITION__, read back like any
+    touched partition) must remove that directory too —
+    otherwise the pre-delete images resurrect on the next read."""
+    import os
+
+    from energydatalake_spark.io.writers import apply_cdc_batch
+
+    path = str(tmp_path / "cdc_sink3")
+    schema = "k string, v bigint, t string, op string, seq bigint"
+    # 'a' has an unparseable timestamp -> null dt; 'b' is healthy.
+    seed = [("a", 1, "not-a-timestamp", "I", 1),
+            ("b", 2, "2024-03-02 10:00:00", "I", 2)]
+    df = spark.createDataFrame(seed, schema).withColumn(
+        "t", F.try_to_timestamp("t")
+    )
+    apply_cdc_batch(df, path, keys=["k"], seq_col="seq", partition_date_col="t")
+    null_dir = os.path.join(path, "dt=__HIVE_DEFAULT_PARTITION__")
+    assert os.path.isdir(null_dir)
+
+    batch = [("a", 1, "not-a-timestamp", "D", 3)]
+    df2 = spark.createDataFrame(batch, schema).withColumn(
+        "t", F.try_to_timestamp("t")
+    )
+    apply_cdc_batch(df2, path, keys=["k"], seq_col="seq", partition_date_col="t")
+
+    assert not os.path.isdir(null_dir)
+    rows = spark.read.parquet(path).collect()
+    assert [(r.k, r.v) for r in rows] == [("b", 2)]
+
+
+def test_apply_cdc_batch_rejects_invalid_op(spark, tmp_path):
+    """ADVICE r7 (low): op values outside {'I','U','D'} (including
+    NULL, which would silently behave as a DELETE) fail loudly."""
+    import pytest
+
+    from energydatalake_spark.io.writers import apply_cdc_batch
+
+    schema = "k string, v bigint, t string, op string, seq bigint"
+    for bad in [None, "X", "d"]:
+        rows = [("a", 1, "2024-03-01 10:00:00", bad, 1)]
+        df = spark.createDataFrame(rows, schema).withColumn(
+            "t", F.to_timestamp("t")
+        )
+        with pytest.raises(ValueError, match="apply_cdc_batch"):
+            apply_cdc_batch(
+                df,
+                str(tmp_path / "cdc_bad"),
+                keys=["k"],
+                seq_col="seq",
+                partition_date_col="t",
+            )

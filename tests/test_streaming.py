@@ -95,6 +95,40 @@ def test_streaming_dedup_cross_batch(spark, tmp_path):
     assert got == ["a", "b", "c"]  # 'a' and 'b' once despite 2+ arrivals
 
 
+def test_streaming_dedup_within_watermark(spark, tmp_path):
+    """Watermark-bounded variant: duplicates inside the horizon are
+    suppressed; state does not require keeping every key forever."""
+    import os
+    from datetime import datetime
+
+    import pandas as pd
+
+    from energydatalake_spark.streaming.dedup import (
+        streaming_dedup_within_watermark,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    t0 = datetime(2024, 3, 1, 0, 0, 0)
+    pdf = pd.DataFrame({"k": ["a", "a", "b"], "ts": [t0, t0, t0]})
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # parquet TIMESTAMP(MICROS)
+    pdf.to_parquet(os.path.join(src, "b0.parquet"))
+    stream = spark.readStream.schema("k string, ts timestamp").parquet(src)
+    out = streaming_dedup_within_watermark(stream, ["k"], "ts", "10 minutes")
+    q = (
+        out.writeStream.format("memory")
+        .queryName("sd_watermark")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = sorted(r.k for r in spark.table("sd_watermark").collect())
+    finally:
+        q.stop()
+    assert got == ["a", "b"]  # in-horizon duplicate suppressed
+
+
 def test_registry_streaming_dedup_uses_stream_not_fallback(spark):
     """The registry query must run its STREAMING path (no RuntimeWarning
     fallback) and match the batch DISTINCT twin exactly — pins the
