@@ -1,139 +1,57 @@
 """Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+(default /root/testdata/sf0.1) and prints ONE JSON line with the keys
+metric, value (total seconds), unit, queries (per-query seconds), sf,
+n_queries, n_failed, comparable, errors (only when a query failed) and
+commit. ``--out PATH`` also writes that payload to PATH; without it no
+file is written.
 
 Each query is timed end-to-end (plan build + execution + collect of the
 result — results here are small aggregates / bounded projections, so
 collect measures engine work, not driver serialization).
 
 Iteration order is registry.BENCH_ORDER — FROZEN at the r17 registry
-order (VERDICT r17 what's-wrong #1) — NOT the live registry order, so
-the driver-window rotation can never again move a query's suite
-position between rounds. Position effects (codegen/JIT absorbed by an
-earlier similar query, cache/GC state) were worth ~31 s (7%) at sf1
-per rotation and burned a re-adjudication A/B cycle every round; with
-the order pinned, a per-query move between rounds is a real signal.
+order (VERDICT r17 what's-wrong #1), not the live registry order, so a
+query's suite position never moves. Position effects (codegen/JIT
+absorbed by an earlier similar query, cache/GC state) were worth ~31 s
+(7%) at sf1 per rotation; with the order pinned, a per-query move is a
+real signal.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _code_state(repo_dir: str) -> str:
-    """`<short-sha>`, `<short-sha>-dirty`, or
-    `<short-sha>-clean-except-bench-artifacts` of the repo that ran
-    the bench; "unknown" when git is unavailable (driver containers).
-
-    The third state closes the r15 bootstrapping loophole (VERDICT r15
-    #5): a bench run PRODUCES an untracked BENCHFULL artifact, so a
-    second same-session run used to stamp itself `-dirty` even though
-    the only dirt was the previous run's output. Untracked
-    BENCH*/CORRECTNESS*/MIRROR* json files are measurement artifacts,
-    not code — they cannot change what the bench measures — so they
-    get their own honest stamp instead of polluting `-dirty` (which
-    now always means CODE differs from the sha)."""
-    import subprocess
+def _commit(repo_dir: str) -> str:
+    """`<short-sha>`, or `<short-sha>-dirty` when tracked files differ
+    from it; "unknown" when git is unavailable (driver containers)."""
+    def git(*args: str) -> str:
+        return subprocess.run(["git", *args], cwd=repo_dir, capture_output=True,
+                              text=True, timeout=10).stdout.strip()
 
     try:
-        sha = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=repo_dir, capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
+        sha = git("rev-parse", "--short", "HEAD")
         if not sha:
             return "unknown"
-        status = subprocess.run(
-            ["git", "status", "--porcelain"],
-            cwd=repo_dir, capture_output=True, text=True, timeout=10,
-        ).stdout
-        artifact = re.compile(r"(BENCH|CORRECTNESS|MIRROR)\w*\.json$")
-        real_dirt = artifact_dirt = False
-        for line in status.splitlines():
-            if not line.strip():
-                continue
-            path = line[3:].strip().strip('"')
-            # Untracked OR tracked-modified artifacts both count as
-            # artifact dirt (r16 self-review: the in-place
-            # median_of_runs refresh modifies the committed canonical,
-            # so ??-only would re-open the loophole on the very next
-            # run after a rerun) — artifacts cannot change what the
-            # bench measures, tracked or not.
-            if artifact.fullmatch(os.path.basename(path)):
-                artifact_dirt = True
-            else:
-                real_dirt = True
-        if real_dirt:
-            return f"{sha}-dirty"
-        if artifact_dirt:
-            return f"{sha}-clean-except-bench-artifacts"
-        return sha
+        dirty = git("status", "--porcelain", "--untracked-files=no")
+        return f"{sha}-dirty" if dirty else sha
     except Exception:
         return "unknown"
 
 
-def _artifact_matches_committed_blob(path: str, repo_dir: str) -> bool:
-    """True if ``path`` is untracked / tracked-unmodified, or differs
-    from its committed blob SOLELY in the derived ``median_of_runs``
-    field — the one field the in-place median refresh legitimately
-    rewrites. A tracked-MODIFIED sibling may have been hand-edited:
-    artifact-dirt stamping deliberately ignores tracked artifact
-    modifications for the commit stamp, so without this gate an edited
-    ``value`` would join the median family (ADVICE r16)."""
-    import subprocess
-
-    rel = os.path.relpath(path, repo_dir)
-    try:
-        st = subprocess.run(
-            ["git", "status", "--porcelain", "--", rel],
-            cwd=repo_dir, capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        if not st or st.startswith("??"):
-            return True
-        blob = subprocess.run(
-            ["git", "show", f"HEAD:{rel}"],
-            cwd=repo_dir, capture_output=True, text=True, timeout=10,
-        )
-        if blob.returncode != 0:
-            return False
-        a = json.load(open(path))
-        b = json.loads(blob.stdout)
-        a.pop("median_of_runs", None)
-        b.pop("median_of_runs", None)
-        return a == b
-    except Exception:
-        return False
-
-
-def main() -> None:
-    import argparse
-
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument(
-        "--out",
-        default=None,
-        help="explicit path for the full per-query artifact. Default: the "
-        "canonical BENCHFULL_r{N}.json IF it does not exist yet, else an "
-        "auto-suffixed BENCHFULL_r{N}_rerun{K}.json — a disclosure/diagnostic "
-        "re-run can never clobber the committed round headline (VERDICT r14 "
-        "#3: third occurrence of the clobber class; fix the tool, not the "
-        "process).",
-    )
-    args = ap.parse_args()
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    from energydatalake_spark.plans.registry import QUERIES, bench_order
-    from energydatalake_spark.session import get_spark
-
-    spark = get_spark("bench")
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs untimed, so the timed loop
+    measures steady-state plans, not session bring-up."""
+    from energydatalake_spark import release_caches
+    from energydatalake_spark.plans.registry import QUERIES
 
     # ------------------------------------------------------------------
     # WARM-UP POLICY (frozen r9, VERDICT r8 #8). The list below is
@@ -212,12 +130,8 @@ def main() -> None:
         ).parquet(warm_dir + "/t")
         warm_stream = spark.readStream.schema("k string").parquet(warm_dir + "/t")
         run_stream_to_memory(
-            spark,
-            streaming_dedup(warm_stream, ["k"]),
-            "bench_warmup_stream",
-            "append",
-            timeout_sec=60.0,
-            shuffle_partitions=2,
+            spark, streaming_dedup(warm_stream, ["k"]), "bench_warmup_stream",
+            "append", timeout_sec=60.0, shuffle_partitions=2,
         )
     except Exception as exc:  # warm-up must never fail the bench
         print(f"# stream warm-up skipped: {exc}", file=sys.stderr)
@@ -248,50 +162,35 @@ def main() -> None:
     # precedent exactly); (b) baseline restatement: the query is NOT
     # in the r01 common set, so the r01 baseline ratio is unchanged by
     # warming it.
-    from energydatalake_spark import release_caches
-
-    def _release_caches() -> None:
+    for warm_q in ("streaming_enrich", "streaming_asof", "multimodal_decode",
+                   "minhash_pairs", "dedup_embedding_lsh"):
+        q = QUERIES[warm_q]  # KeyError, not a silent skip, on a renamed query
+        try:
+            q.build(spark, "/root/testdata/sf0.001").collect()
+        except Exception as exc:
+            print(f"# {warm_q} smoke warm-up skipped: {exc}", file=sys.stderr)
         # per-invocation scratch (shingle explosions, quantized
         # vectors) must not crowd executor storage across the suite
         release_caches()
 
-    for warm_q in (
-        "streaming_enrich",
-        "streaming_asof",
-        "multimodal_decode",
-        "minhash_pairs",
-        "dedup_embedding_lsh",
-    ):
-        if warm_q in QUERIES:
-            try:
-                QUERIES[warm_q].build(spark, "/root/testdata/sf0.001").collect()
-            except Exception as exc:
-                print(f"# {warm_q} smoke warm-up skipped: {exc}", file=sys.stderr)
-            _release_caches()
 
-    # Round-over-round regression guard: compare per-query against the
-    # newest BENCH_r*.json (stderr only — the stdout contract stays one
-    # JSON line).
-    import glob
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("--out", default=None,
+                    help="also write the full JSON payload to this path "
+                    "(a kept stdout tail may truncate the per-query map)")
+    args = ap.parse_args()
 
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev: dict[str, float] = {}
-    # Prefer the committed full maps (BENCHFULL_r*.json, written below):
-    # the driver's BENCH_r*.json keeps only a 4 KB tail of stdout, which
-    # truncates the head of the per-query dict past ~80 queries.
-    prev_files = sorted(glob.glob(os.path.join(repo_dir, "BENCHFULL_r*.json")))
-    if prev_files:
-        try:
-            prev = json.load(open(prev_files[-1]))["queries"]
-        except Exception:
-            prev = {}
-    if not prev:
-        bench_files = sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))
-        if bench_files:
-            try:
-                prev = json.load(open(bench_files[-1]))["parsed"]["queries"]
-            except Exception:
-                prev = {}
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+
+    from energydatalake_spark import release_caches
+    from energydatalake_spark.plans.registry import QUERIES, bench_order
+    from energydatalake_spark.session import get_spark
+
+    spark = get_spark("bench")
+    warm_up(spark, sf_dir)
 
     # Per-query isolation (VERDICT r4 item 2): one failing query must
     # never zero the other measurements — record its error and keep
@@ -307,237 +206,38 @@ def main() -> None:
         except Exception as exc:
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: FAILED {errors[name]}", file=sys.stderr)
-            _release_caches()
+            release_caches()
             continue
         timings[name] = round(time.perf_counter() - t0, 4)
         # Shingle caches are per-invocation scratch; holding them across
         # the suite would crowd executor storage and skew later queries.
-        _release_caches()
-        flag = ""
-        if name in prev and prev[name] > 0.2 and timings[name] > 2 * prev[name]:
-            flag = f"  ** REGRESSION vs r-1 ({prev[name]:.2f}s)"
-        print(f"# {name}: {timings[name]:.2f}s ({n} rows){flag}", file=sys.stderr)
+        release_caches()
+        print(f"# {name}: {timings[name]:.2f}s ({n} rows)", file=sys.stderr)
 
-    total = round(sum(timings.values()), 4)
     payload = {
         "metric": "registry_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
         # A failed query contributes NO time, so the total is only
-        # comparable round-over-round when nothing failed and the query
+        # comparable run-over-run when nothing failed and the query
         # sets match — mark that explicitly instead of letting a broken
-        # round read as a speedup.
+        # run read as a speedup.
         "n_queries": len(timings),
         "n_failed": len(errors),
         "comparable": not errors,
-        # Which code state produced this artifact (VERDICT r12 #6):
-        # ledger prose must be able to pin every BENCHFULL number to a
-        # commit instead of drifting from it.
-        "commit": _code_state(repo_dir),
+        # Which code state produced this payload (VERDICT r12 #6), so
+        # every recorded number can be pinned to a commit.
+        "commit": _commit(os.path.dirname(os.path.abspath(__file__))),
     }
     if errors:
         payload["errors"] = errors
-    # Committed full artifact (VERDICT r7 #6): the driver's
-    # BENCH_r{N}.json stores only a 4 KB stdout tail, which at 90+
-    # queries truncates the head of the per-query map and nulls
-    # `parsed`. Write the complete payload to BENCHFULL_r{N}.json so
-    # round-over-round comparison never degrades. stdout stays ONE line.
-    #
-    # Round labeling (ADVICE r8): $SPARK_GRAFT_ROUND wins when set;
-    # otherwise: a BENCHFULL strictly NEWER than the newest driver
-    # BENCH means an in-round run already chose this round's label —
-    # reuse it; else the round in flight is newest BENCH + 1. The one
-    # remaining ambiguity is a manual rerun AFTER the driver's
-    # round-end BENCH_r{N} lands but before round N+1 starts (the
-    # file state is indistinguishable from a round-(N+1) start) — that
-    # case mislabels by one and is exactly what the env var is for.
-    env_round = os.environ.get("SPARK_GRAFT_ROUND")
-    bench_rounds = [
-        int(m.group(1))
-        for f in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", f))
-    ]
-    full_rounds = [
-        int(m.group(1))
-        for f in glob.glob(os.path.join(repo_dir, "BENCHFULL_r*.json"))
-        if (m := re.search(r"BENCHFULL_r(\d+)\.json$", f))
-    ]
-    this_round = None
-    if env_round is not None:
-        try:
-            this_round = int(env_round)
-            if this_round < 1:
-                raise ValueError(env_round)
-        except ValueError:
-            print(
-                f"# SPARK_GRAFT_ROUND={env_round!r} invalid; deriving from "
-                f"artifacts",
-                file=sys.stderr,
-            )
-            this_round = None
-    derivation = "env"
-    if this_round is None:
-        bench_max = max(bench_rounds) if bench_rounds else 0
-        full_max = max(full_rounds) if full_rounds else 0
-        if full_max > bench_max:
-            this_round, derivation = full_max, "reuse newest BENCHFULL"
-        else:
-            this_round, derivation = bench_max + 1, "newest BENCH + 1"
+    print(json.dumps(payload), flush=True)
     if args.out:
-        full_path = (
-            args.out
-            if os.path.isabs(args.out)
-            else os.path.join(repo_dir, args.out)
-        )
-        derivation = "--out"
-    else:
-        full_path = os.path.join(repo_dir, f"BENCHFULL_r{this_round:02d}.json")
-        # Never clobber an existing (possibly committed) round headline:
-        # the first run of a round claims the canonical name; every later
-        # run without --out lands under a _rerun{K} suffix.
-        k = 1
-        while os.path.exists(full_path):
-            full_path = os.path.join(
-                repo_dir, f"BENCHFULL_r{this_round:02d}_rerun{k}.json"
-            )
-            k += 1
-    print(
-        f"# BENCHFULL round {this_round:02d} ({derivation}) -> "
-        f"{os.path.basename(full_path)}"
-        + (" — overwriting existing file" if os.path.exists(full_path) else ""),
-        file=sys.stderr,
-    )
-    # Noise-robust headline companion (VERDICT r15 #4): the r15
-    # headline (136.3 s) was the WORST of three same-code runs purely
-    # by run order. Keep the first-run-claims rule for artifact
-    # integrity, but stamp every artifact with the MEDIAN total across
-    # all comparable same-commit runs of this round (including this
-    # one), so round-over-round comparison can read a noise-robust
-    # number without human adjudication. A rerun also refreshes the
-    # field inside the canonical headline artifact in place — ONLY
-    # this derived field, never the measurements.
-    def _same_code_runs() -> dict[str, float]:
-        # The family is STRICT: canonical-or-rerun filenames of THIS
-        # round only, same commit base sha, same sf. The first cut
-        # globbed BENCHFULL_r{N}* and seeded the current run
-        # unconditionally, so an --out sf1 artifact (which shares the
-        # round number in its name but not the scale) merged sf0.1 and
-        # sf1 totals into one "median" and refreshed that mix into the
-        # canonical headline — caught live in r16.
-        fam = re.compile(rf"BENCHFULL_r{this_round:02d}(_rerun\d+)?\.json$")
-
-        def _same_code(stamp: str) -> bool:
-            # Same CODE means same base sha and no `-dirty` suffix on
-            # either side (r16 self-review: split('-')[0] alone let a
-            # modified-code run join the family and refresh the clean
-            # canonical's median). `-clean-except-bench-artifacts`
-            # has identical code to the bare sha by construction.
-            return (
-                stamp.split("-")[0] == payload["commit"].split("-")[0]
-                and not stamp.endswith("-dirty")
-            )
-
-        if (
-            payload["commit"].split("-")[0] == "unknown"
-            or payload["commit"].endswith("-dirty")
-            or not fam.fullmatch(os.path.basename(full_path))
-            # Family members must live in the repo root (ADVICE r16):
-            # an --out path ELSEWHERE whose basename matches the
-            # family pattern would collide with the same-named repo
-            # file in the basename-keyed runs dict, silently dropping
-            # one measurement. An outside-the-repo run is a capture/
-            # diagnostic run and gets no median family.
-            or os.path.dirname(os.path.abspath(full_path)) != repo_dir
-        ):
-            return {}
-        runs = {os.path.basename(full_path): total} if not errors else {}
-        for f in glob.glob(
-            os.path.join(repo_dir, f"BENCHFULL_r{this_round:02d}*.json")
-        ):
-            if os.path.abspath(f) == os.path.abspath(
-                full_path
-            ) or not fam.fullmatch(os.path.basename(f)):
-                continue
-            try:
-                d = json.load(open(f))
-                if (
-                    _same_code(str(d.get("commit", "")))
-                    and d.get("comparable")
-                    and d.get("sf") == payload["sf"]
-                    and _artifact_matches_committed_blob(f, repo_dir)
-                ):
-                    runs[os.path.basename(f)] = float(d["value"])
-            except Exception:
-                # one malformed sibling artifact must not lose this
-                # run's payload after the full sweep (r16 self-review)
-                continue
-        return runs
-
-    import statistics
-
-    # ONE canonical home for the round's cross-round number (VERDICT
-    # r17 #5: BENCH_r17's n=1 median and BENCHFULL_r17's n=2 median
-    # answered "what is this round's number" differently). The
-    # canonical home is BENCHFULL_r{N}.json's median_of_runs — the
-    # committed artifact whose median the in-place refresh keeps
-    # current across same-code reruns. The stdout line (the driver's
-    # BENCH_r{N}.json tail) and every rerun artifact carry this
-    # pointer instead of competing for the title.
-    canonical_name = f"BENCHFULL_r{this_round:02d}.json"
-    payload["canonical_artifact"] = canonical_name
-    payload["is_canonical_artifact"] = (
-        os.path.basename(full_path) == canonical_name
-        and os.path.dirname(os.path.abspath(full_path)) == repo_dir
-    )
-    payload["round_number_home"] = (
-        f"median_of_runs.value inside {canonical_name} is THE round "
-        "number; any median_of_runs in a rerun/stdout payload is that "
-        "run's own family view, kept only for transparency"
-    )
-    runs = _same_code_runs()
-    if runs:
-        payload["median_of_runs"] = {
-            "n_runs": len(runs),
-            "value": round(statistics.median(runs.values()), 4),
-            "runs": dict(sorted(runs.items())),
-        }
-    try:
-        with open(full_path, "w") as fh:
+        with open(args.out, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
             fh.write("\n")
-    except OSError as exc:
-        print(f"# BENCHFULL write skipped: {exc}", file=sys.stderr)
-    canonical = os.path.join(repo_dir, f"BENCHFULL_r{this_round:02d}.json")
-    if runs and os.path.abspath(full_path) != os.path.abspath(canonical):
-        try:
-            head = json.load(open(canonical))
-            # same code AND same scale (r16 self-review: a same-round
-            # rerun at another sf must not overwrite the canonical's
-            # median with an other-scale value — the relocated form of
-            # the family-mixing bug fixed above)
-            if (
-                str(head.get("commit", "")).split("-")[0]
-                == payload["commit"].split("-")[0]
-                and not str(head.get("commit", "")).endswith("-dirty")
-                and head.get("sf") == payload["sf"]
-                # never refresh INTO a hand-edited canonical either
-                # (same gate as family membership, ADVICE r16)
-                and _artifact_matches_committed_blob(canonical, repo_dir)
-            ):
-                head["median_of_runs"] = payload["median_of_runs"]
-                with open(canonical, "w") as fh:
-                    json.dump(head, fh, indent=1, sort_keys=True)
-                    fh.write("\n")
-                print(
-                    "# refreshed median_of_runs in "
-                    f"{os.path.basename(canonical)}",
-                    file=sys.stderr,
-                )
-        except Exception as exc:
-            print(f"# median refresh skipped: {exc}", file=sys.stderr)
-    print(json.dumps(payload))
 
 
 if __name__ == "__main__":

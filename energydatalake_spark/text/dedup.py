@@ -150,17 +150,44 @@ def shared_shingle_frame(
     the same 16-byte rows; pass this frame to both via their
     ``shingle_frame`` kwarg and the chain runs once (guide §5: one
     materialization, every consumer reuses it). Registered in the
-    shingle cache — released with :func:`release_shingle_cache`."""
+    shingle cache — released with :func:`release_shingle_cache`.
+
+    The frame records ``(text_col, id_col, n)`` as a Python attribute
+    (not a column, so plans are unchanged); both consumers check it
+    against their own arguments with :func:`_check_shingle_frame`."""
     from energydatalake_spark.text.stats import _hex15_to_long
 
     md = F.md5(F.col("shingle"))
-    return _persist_shingles(
+    ex = _persist_shingles(
         _exploded_shingles(df, text_col, id_col, n).select(
             F.col(id_col),
             _hash_long(md).alias("h0"),
             _hex15_to_long(md).alias("sh"),
         )
     )
+    ex._shingle_geometry = (text_col, id_col, n)
+    return ex
+
+
+def _check_shingle_frame(
+    shingle_frame: DataFrame, text_col: str, id_col: str, n: int
+) -> None:
+    """Raise ``ValueError`` unless ``shingle_frame`` is a
+    :func:`shared_shingle_frame` built with this ``(text_col, id_col,
+    n)``: a frame of another shingle width or id column would yield
+    pairs for the wrong geometry without any error. Reads only the
+    schema and the recorded attribute, so no Spark job runs."""
+    want = (text_col, id_col, n)
+    got = getattr(shingle_frame, "_shingle_geometry", None)
+    if got != want:
+        raise ValueError(
+            f"shingle_frame geometry (text_col, id_col, n) = {got} does not "
+            f"match this call's {want}; build it with shared_shingle_frame"
+            f"(df, {text_col!r}, {id_col!r}, {n})"
+        )
+    missing = {id_col, "h0", "sh"} - set(shingle_frame.columns)
+    if missing:
+        raise ValueError(f"shingle_frame lacks columns {sorted(missing)}")
 
 
 def min_sig_agree(bands: int, rows: int, threshold: float) -> int:
@@ -366,8 +393,11 @@ def minhash_pairs(
     ``shingle_frame`` (optional) is a precomputed
     :func:`shared_shingle_frame` over the SAME (df, text_col, id_col,
     n) — callers that also run the exact tier (dedup_recall) pass it
-    so the explode chain is computed and cached once for both.
+    so the explode chain is computed and cached once for both. A frame
+    of another (text_col, id_col, n) raises ``ValueError``.
     """
+    if shingle_frame is not None:
+        _check_shingle_frame(shingle_frame, text_col, id_col, n)
     # Explode + shingle building is the expensive scan-side work and is
     # reused by three downstream stages (signatures, set sizes, exact
     # verify) — persist it instead of recomputing the lineage. What
@@ -558,9 +588,12 @@ def ngram_jaccard_pairs(
     :func:`shared_shingle_frame` over the SAME (df, text_col, id_col,
     n); its ``sh`` column IS this function's 60-bit ``shingle`` hash
     (one md5, two integer views), so passing it skips a second explode
-    chain + cache when the banded tier runs over the same corpus."""
+    chain + cache when the banded tier runs over the same corpus. A
+    frame of another (text_col, id_col, n) raises ``ValueError``."""
     from energydatalake_spark.text.stats import _hex15_to_long
 
+    if shingle_frame is not None:
+        _check_shingle_frame(shingle_frame, text_col, id_col, n)
     if max_input_rows is not None:
         n_in = df.count()
         if n_in > max_input_rows:

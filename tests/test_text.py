@@ -161,6 +161,35 @@ def test_shingle_cache_release(spark, docs):
     assert all(not c.is_cached for c in cached)
 
 
+def test_shingle_frame_geometry_mismatch_raises(spark, docs):
+    """A shared shingle frame of another width, or one stripped of its
+    columns, is refused before any Spark job runs instead of yielding
+    pairs for the wrong geometry."""
+    from energydatalake_spark.text.dedup import (
+        release_shingle_cache,
+        shared_shingle_frame,
+    )
+
+    sc = spark.sparkContext
+    sh5 = shared_shingle_frame(docs, n=5)
+    sc.setJobGroup("test-shingle-geometry", "geometry check")
+    try:
+        with pytest.raises(ValueError, match="geometry"):
+            minhash_pairs(docs, n=3, threshold=0.3, shingle_frame=sh5)
+        with pytest.raises(ValueError, match="geometry"):
+            ngram_jaccard_pairs(docs, n=3, threshold=0.3, shingle_frame=sh5)
+        with pytest.raises(ValueError, match="geometry"):
+            minhash_pairs(docs, n=5, id_col="id", shingle_frame=sh5)
+        stripped = sh5.select("doc_id", "sh")
+        stripped._shingle_geometry = ("text", "doc_id", 5)
+        with pytest.raises(ValueError, match="h0"):
+            minhash_pairs(docs, n=5, shingle_frame=stripped)
+        assert not sc.statusTracker().getJobIdsForGroup("test-shingle-geometry")
+    finally:
+        sc._jsc.clearJobGroup()
+        release_shingle_cache()
+
+
 def test_repetition_stats_known_values(spark):
     from energydatalake_spark.text.stats import repetition_stats
 

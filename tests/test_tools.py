@@ -1,7 +1,9 @@
-"""Tests for the scale-bench tooling: the full-table sf-multiplier
-generator (tools/gen_sf.py) — the whole-registry sf1 measurement rests
-on this generator preserving referential structure and growing every
-table linearly, so those properties are pinned here."""
+"""Tests for the tooling: the full-table sf-multiplier generator
+(tools/gen_sf.py) — the whole-registry sf1 measurement rests on this
+generator preserving referential structure and growing every table
+linearly, so those properties are pinned here — plus an end-to-end run
+of tools/profile_queries.py, an import check of every tool and of
+bench.py, and the package reachability guard."""
 
 from __future__ import annotations
 
@@ -204,81 +206,45 @@ def test_gen_sf_skew_fk_closure_and_other_columns_untouched(skew_dir):
         assert t1.equals(t0), t
 
 
-# ---------------------------------------------------------------- bench.py
-# Median-family membership gates (ADVICE r16): a hand-edited tracked
-# artifact must not join median_of_runs, and a legitimately
-# median-refreshed canonical (which differs from its blob ONLY in that
-# derived field) must.
+# ------------------------------------------------------ profile_queries
+# Runs end to end at the smoke scale: bench's shared warm-up must not
+# skip a step, and the counters read from perfbench.probe must see the
+# query's jobs.
+
+_PROFILE_FIELDS = {
+    "wall_s", "rows", "n_jobs", "n_stages", "n_tasks", "executor_ms",
+    "shuffle_r_mb", "shuffle_w_mb", "input_mb", "codegen_compiles",
+}
 
 
-@pytest.fixture()
-def git_repo(tmp_path):
+def test_profile_queries_smoke(tmp_path):
     import json
     import os
 
-    repo = tmp_path / "r"
-    repo.mkdir()
-    env = dict(
-        os.environ,
-        GIT_AUTHOR_NAME="t", GIT_AUTHOR_EMAIL="t@t",
-        GIT_COMMITTER_NAME="t", GIT_COMMITTER_EMAIL="t@t",
+    from tests.conftest import SF_SMOKE
+
+    out = tmp_path / "profile.json"
+    r = subprocess.run(
+        [sys.executable, "tools/profile_queries.py",
+         "--only", "pricing_summary,asof_join", "--out", str(out)],
+        cwd=_REPO,
+        env=dict(os.environ, SPARK_GRAFT_SF_DIR=SF_SMOKE),
+        capture_output=True,
+        text=True,
     )
-
-    def git(*a):
-        subprocess.run(
-            ["git", *a], cwd=repo, check=True, capture_output=True, env=env
-        )
-
-    git("init", "-q")
-    art = repo / "BENCHFULL_r99.json"
-    art.write_text(
-        json.dumps({"value": 100.0, "sf": 0.1, "commit": "abc1234"}) + "\n"
-    )
-    git("add", "BENCHFULL_r99.json")
-    git("commit", "-qm", "seed")
-    return repo, art
-
-
-def test_bench_blob_gate_accepts_unmodified_and_untracked(git_repo):
-    import json
-
-    import bench
-
-    repo, art = git_repo
-    assert bench._artifact_matches_committed_blob(str(art), str(repo))
-    new = repo / "BENCHFULL_r99_rerun1.json"
-    new.write_text(json.dumps({"value": 90.0, "sf": 0.1}) + "\n")
-    assert bench._artifact_matches_committed_blob(str(new), str(repo))
-
-
-def test_bench_blob_gate_accepts_median_only_refresh(git_repo):
-    import json
-
-    import bench
-
-    repo, art = git_repo
-    d = json.loads(art.read_text())
-    d["median_of_runs"] = {"n_runs": 2, "value": 95.0}
-    art.write_text(json.dumps(d) + "\n")
-    assert bench._artifact_matches_committed_blob(str(art), str(repo))
-
-
-def test_bench_blob_gate_rejects_edited_measurement(git_repo):
-    import json
-
-    import bench
-
-    repo, art = git_repo
-    d = json.loads(art.read_text())
-    d["value"] = 10.0  # hand-edited headline
-    art.write_text(json.dumps(d) + "\n")
-    assert not bench._artifact_matches_committed_blob(str(art), str(repo))
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "skipped" not in r.stderr
+    profile = json.loads(out.read_text())["profile"]
+    assert set(profile) == {"pricing_summary", "asof_join"}
+    for name, rec in profile.items():
+        assert set(rec) == _PROFILE_FIELDS, name
+        assert rec["n_jobs"] >= 1 and rec["n_tasks"] >= 1, (name, rec)
 
 
 # --------------------------------------------------------- kept tools
-# Every tool module must import on its own: a kept tool that still
-# imports a deleted one fails here, not on its first manual run.
-# driver_sim runs its checks at import time, so it is left out.
+# Every tool module, and bench.py, must import on its own: a kept tool
+# that still imports a deleted one fails here, not on its first manual
+# run. driver_sim runs its checks at import time, so it is left out.
 
 _TOOLS_DIR = Path(__file__).resolve().parent.parent / "tools"
 
@@ -287,10 +253,10 @@ _TOOLS_DIR = Path(__file__).resolve().parent.parent / "tools"
     "name",
     sorted(
         p.stem for p in _TOOLS_DIR.glob("*.py") if p.stem != "driver_sim"
-    ),
+    ) + ["bench"],
 )
 def test_tool_modules_import(name):
-    importlib.import_module(f"tools.{name}")
+    importlib.import_module(name if name == "bench" else f"tools.{name}")
 
 
 # ------------------------------------------------------ package reachability

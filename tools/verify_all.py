@@ -6,7 +6,7 @@ stops at the first failure:
   3. bare-session driver simulation (tools/driver_sim.py)
   4. full pytest suite
   5. physical-plan audit (tools/plan_audit.py — regenerates PLANS.md)
-  6. bench at $SPARK_GRAFT_SF_DIR (writes BENCHFULL_r{N}.json)
+  6. bench at $SPARK_GRAFT_SF_DIR (prints one JSON line, writes no file)
 
 Usage: python tools/verify_all.py [--quick]
 --quick runs only steps 1 and 3 (the cheap pre-commit gate).
